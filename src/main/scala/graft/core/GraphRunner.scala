@@ -119,22 +119,6 @@ final class GraphRunner(
     spark.conf.getOption("graft.engine.shufflePartitions").map(_.toInt)
       .getOrElse(math.min(8, spark.sparkContext.defaultParallelism))
 
-  /** Opt-in per-commit phase timing (`graft.engine.timing=true`):
-    * prints materialize/checkpoint/write wall times per batch to stderr.
-    * Observability for perf attribution — off by default, zero cost when
-    * disabled.
-    */
-  private val timing: Boolean =
-    spark.conf.getOption("graft.engine.timing").exists(_.toBoolean)
-  private def timed[A](phase: String)(f: => A): A =
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      try f
-      finally System.err.println(
-        f"[engine-timing] $phase ${(System.nanoTime() - t0) / 1e9}%.3fs")
-    }
-
   private def withEngineShuffle[A](f: => A): A =
     if (engineShuffleParts <= 0) f
     else {
@@ -337,7 +321,7 @@ final class GraphRunner(
     // RollForwardAsync concurrently per batch too).
     val toUnpersist = mutable.ArrayBuffer[DataFrame]()
     try {
-      timed("materialize") { levels.foreach { level =>
+      Phase.timed(spark, "[engine-timing] materialize") { levels.foreach { level =>
         val built = level.map { r =>
           // T9: blocks at or before the reducer's start point are not
           // delivered to it (a late-starting reducer indexes from its
@@ -357,14 +341,11 @@ final class GraphRunner(
         }
         val shapedByReducer: Seq[(String, Map[String, DataFrame])] =
           if (store.preferLocalOutputs) {
-            import scala.concurrent.{Await, Future}
-            import scala.concurrent.ExecutionContext.Implicits.global
-            import scala.concurrent.duration.Duration
-            Await.result(Future.sequence(built.map { case (name, out) =>
-              Future(name -> out.map { case (t, df) =>
+            Overlap.all(built.map { case (name, out) => () =>
+              name -> out.map { case (t, df) =>
                 t -> BatchContext.localized(spark, df)
-              })
-            }), Duration.Inf)
+              }
+            })
           } else built.map { case (name, out) =>
             name -> out.map { case (t, df) =>
               val c = df.cache(); toUnpersist += c; t -> c
@@ -385,7 +366,9 @@ final class GraphRunner(
   private def flushCommit(blocksDf: DataFrame, batchId: Long,
       appends: mutable.LinkedHashMap[String, (DataFrame, String)],
       top: Seq[Point], minSlot: Long, ctx: BatchContext): Unit = {
-    val stored = timed("checkpoint-read") { store.checkpoints }
+    val stored = Phase.timed(spark, "[engine-timing] checkpoint-read") {
+      store.checkpoints
+    }
     val newCps = topoOrder.map { r =>
       val prior = pendingPoints.getOrElse(r.name,
         stored.getOrElse(r.name, Seq.empty))
@@ -442,7 +425,7 @@ final class GraphRunner(
         val owner = tableOwner.getOrElse(table, table)
         segTimes(owner) = segTimes.getOrElse(owner, 0.0) + sec
       }
-    val wrote = timed("store-commit") {
+    val wrote = Phase.timed(spark, "[engine-timing] store-commit") {
       store.commit(batchId, appends.toMap, newCps, compactors, onSegment)
     }
     telemetry.foreach(t => segTimes.foreach { case (r, sec) =>

@@ -638,21 +638,15 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
       // plans are independent — run them as CONCURRENT Spark actions so
       // scheduler latency overlaps instead of summing (the reference
       // runs its reducers' RollForwardAsync concurrently too).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val collected = Await.result(
-        Future.sequence(appends.toSeq.map { case (table, (df, slotCol)) =>
-          Future {
-            // clock the collect INSIDE the future: a shared t0 would
-            // charge every table for its slowest sibling plus the
-            // serialized inserts ahead of it in the txn loop below
-            val t0 = System.nanoTime()
-            val rows = df.collect()
-            (table, slotCol, df.schema, rows,
-              (System.nanoTime() - t0) / 1e9)
-          }
-        }), Duration.Inf)
+      val collected = Overlap.all(
+        appends.toSeq.map { case (table, (df, slotCol)) => () =>
+          // clock the collect INSIDE the leg: a shared t0 would charge
+          // every table for its slowest sibling plus the serialized
+          // inserts ahead of it in the txn loop below
+          val t0 = System.nanoTime()
+          val rows = df.collect()
+          (table, slotCol, df.schema, rows, (System.nanoTime() - t0) / 1e9)
+        })
       if (collected.forall(_._4.isEmpty)) return false
       // Custom-compaction staging is a SPARK action set too — runs with
       // the txn still closed (committed scan ∪ this batch's collected

@@ -288,18 +288,12 @@ final class StateStore(val root: String, spark: SparkSession,
     // max(write); on a cluster it simply keeps the executors busy across
     // the per-table commit jobs.
     val appendSeq = appends.toSeq
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val written = Await.result(Future.sequence(
-      appendSeq.zipWithIndex.map { case ((table, (df, slotCol)), i) =>
-        Future {
-          val t0 = System.nanoTime()
-          val seg = writeSegment(df, table, m.nextSegId + i, slotCol)
-          (table, seg, (System.nanoTime() - t0) / 1e9)
-        }
-      }), Duration.Inf)
+    val written = Overlap.all(
+      appendSeq.zipWithIndex.map { case ((table, (df, slotCol)), i) => () =>
+        val t0 = System.nanoTime()
+        val seg = writeSegment(df, table, m.nextSegId + i, slotCol)
+        (table, seg, (System.nanoTime() - t0) / 1e9)
+      })
     var nextId = m.nextSegId + appendSeq.size
     var wroteAny = false
     written.foreach { case (table, segOpt, sec) =>
@@ -338,17 +332,15 @@ final class StateStore(val root: String, spark: SparkSession,
       }
     }
     // compaction merges are independent per table — same concurrency
-    val compacted = Await.result(Future.sequence(
-      toCompact.zipWithIndex.map { case ((table, segs, slotCol), i) =>
-        Future {
-          val (old, recent) = segs.splitAt(segs.size - keepRecent)
-          val merged0 = spark.read
-            .parquet(old.map(s => segPath(table, s.id)): _*)
-          val merged = compactors.get(table).fold(merged0)(b => b.run(merged0))
-          val seg = writeSegment(merged, table, nextId + i, slotCol)
-          table -> (seg.toSeq ++ recent)
-        }
-      }), Duration.Inf).toMap
+    val compacted = Overlap.all(
+      toCompact.zipWithIndex.map { case ((table, segs, slotCol), i) => () =>
+        val (old, recent) = segs.splitAt(segs.size - keepRecent)
+        val merged0 = spark.read
+          .parquet(old.map(s => segPath(table, s.id)): _*)
+        val merged = compactors.get(table).fold(merged0)(b => b.run(merged0))
+        val seg = writeSegment(merged, table, nextId + i, slotCol)
+        table -> (seg.toSeq ++ recent)
+      }).toMap
     nextId += toCompact.size
     tables = tables.map { case (table, segs) =>
       table -> compacted.getOrElse(table, segs)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.core.Overlap.inParallel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1632,66 +1633,47 @@ object Dedup extends QueryModule {
        |ORDER BY n.doc_id""".stripMargin
   }
 
-  /** Provenance-tagged frozen lexical index — the RETRACTABLE variant
-    * of [[LexIndex]] (r09 verdict #1): every state row carries the
-    * batch_id of the promote that produced it, and the exact table
-    * keeps per-(norm_md5, batch) PARTIAL mins instead of one collapsed
-    * min. That single representational change buys the inverse
-    * operation a rolling corpus needs for bad-data recall: a plain min
-    * is not subtractable (dropping a batch can RAISE the true min, and
-    * the collapsed state no longer knows to what), but per-batch
-    * partials are — retracting batch B is `filter(batch_id =!= B)`,
-    * and the min over the survivors IS the index over the surviving
-    * documents. Mirrors the reference's retraction-first design
-    * (`ReducerGraphProcessor.cs:176-209` rolls reducer state back by
-    * replaying inverse deltas) re-expressed as algebra on a stored
-    * relation: no replay, no rebuild, no read of frozen text.
+  /** The provenance-tagged frozen lexical index — the RETRACTABLE
+    * variant of [[LexIndex]] (r09 verdict #1) as a [[PartitionedState]]
+    * family: every row carries the batch_id of its promote, and the
+    * exact table keeps per-(norm_md5, batch) PARTIAL mins instead of
+    * one collapsed min. A plain min is not subtractable (dropping a
+    * batch can RAISE the true min, and the collapsed state no longer
+    * knows to what), but per-batch partials are: the min over the
+    * survivors IS the index over the surviving documents. Promote is a
+    * pure APPEND (cheaper than [[mergeLexIndex]], whose merge-time min
+    * this representation defers to probe time, where the group is
+    * batches-per-key, not docs-per-key).
     *
-    * Cost shape at 100 TB: promote = pure APPEND (the min collapse
-    * moves to probe time, where the group is batches-per-key — a
-    * handful — not docs-per-key); retract = partition pruning over a
-    * batch_id-partitioned store ([[Scratch.materializePartitioned]]),
-    * i.e. the retracted batch's files are never opened and dropping
-    * them physically is one directory delete.
+    * Exactly-once: the min-merge absorbs a duplicate promote verdict-
+    * wise, but the copy would live under TWO batch partitions and
+    * demoting the original batch would leave it — an at-least-once
+    * source still wants the gated promote for a TOTAL demote.
     */
-  private[graft] final case class LexIndexP(exact: DataFrame, bands: DataFrame)
-
-  private[graft] def buildLexIndexP(docs: DataFrame, batchId: Long)
-      : LexIndexP = {
-    val b = buildLexIndex(docs)
-    LexIndexP(b.exact.withColumn("batch_id", lit(batchId)),
-      b.bands.withColumn("batch_id", lit(batchId)))
-  }
-
-  /** Promote under provenance: append the delta batch's partial states.
-    * No re-aggregation at all — cheaper than [[mergeLexIndex]], whose
-    * merge-time min this representation defers to probe time.
-    */
-  private[graft] def mergeLexIndexP(idx: LexIndexP, deltaDocs: DataFrame,
-      batchId: Long): LexIndexP = {
-    val d = buildLexIndexP(deltaDocs, batchId)
-    LexIndexP(idx.exact.union(d.exact), idx.bands.union(d.bands))
-  }
-
-  /** Retract (demote) one promoted batch — the exact inverse of its
-    * promote, by construction: both tables drop precisely the rows that
-    * promote appended. Equality with an index REBUILT without the batch
-    * is the q102 oracle's hash gate and FrozenIndexSpec's round-trips.
-    */
-  private[graft] def retractLexIndexP(idx: LexIndexP, batchId: Long)
-      : LexIndexP =
-    LexIndexP(idx.exact.filter(col("batch_id") =!= batchId),
-      idx.bands.filter(col("batch_id") =!= batchId))
+  private[graft] val lexFamily: PartitionedState.Family =
+    PartitionedState.family(
+      "exact" -> "norm_md5 STRING, idx_doc BIGINT",
+      "bands" -> "doc_id BIGINT, band_key STRING") { (docs, batchId) =>
+      PartitionedState(Seq(
+        "exact" -> docs.select(normMd5(col("text")).as("norm_md5"),
+            col("doc_id"), batchId.as("batch_id"))
+          .groupBy(col("norm_md5"), col("batch_id"))
+          .agg(min(col("doc_id")).as("idx_doc"))
+          .select(col("norm_md5"), col("idx_doc"), col("batch_id")),
+        "bands" -> bandEntries(docs.select(col("doc_id"), col("text")))
+          .withColumn("batch_id", batchId)))
+    }
 
   /** Collapse provenance state to the probe shape: min over each key's
     * surviving batch partials (a per-key group of batches, not of
     * documents). `probeLex(collapseLex(idx), …)` is the provenance
     * index's probe contract.
     */
-  private[graft] def collapseLex(idx: LexIndexP): LexIndex =
+  private[graft] def collapseLex(idx: PartitionedState): LexIndex =
     LexIndex(
-      idx.exact.groupBy(col("norm_md5")).agg(min(col("idx_doc")).as("idx_doc")),
-      idx.bands.select(col("band_key"), col("doc_id")))
+      idx("exact").groupBy(col("norm_md5"))
+        .agg(min(col("idx_doc")).as("idx_doc")),
+      idx("bands").select(col("band_key"), col("doc_id")))
 
   /** Frozen-index RETRACTION equivalence (q102) — the lifecycle q100
     * cannot run backwards: bootstrap the index over the frozen third
@@ -1706,16 +1688,12 @@ object Dedup extends QueryModule {
   private def q102(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 10
-    val b0 = buildLexIndexP(docs.filter(m < 3), 0L)
-    val p1 = mergeLexIndexP(b0, docs.filter(m >= 3 && m < 5), 1L)
-    val p2 = mergeLexIndexP(p1, docs.filter(m >= 5 && m < 7), 2L)
+    val p2 = lexFamily(docs.filter(m < 3), 0L)
+      .union(lexFamily(docs.filter(m >= 3 && m < 5), 1L))
+      .union(lexFamily(docs.filter(m >= 5 && m < 7), 2L))
     // the stored index: retraction consumes partitioned INDEX STATE —
     // batch 2's files are pruned out, frozen text is never read
-    val stored = LexIndexP(
-      Scratch.materializePartitioned(p2.exact, "q102_exact", "batch_id"),
-      Scratch.materializePartitioned(p2.bands, "q102_bands", "batch_id"))
-    val demoted = retractLexIndexP(stored, 2L)
-    probeLex(collapseLex(demoted), docs.filter(m >= 7))
+    probeLex(collapseLex(p2.stored("q102").retract(2L)), docs.filter(m >= 7))
   }
 
   private val q102Sql = {
@@ -2099,48 +2077,6 @@ object Dedup extends QueryModule {
         when(hx < "cc", "train").when(hx < "e6", "val").otherwise("test"))
   }
 
-  /** Run two independent Spark-driving computations on driver threads
-    * (guide §2.6 "overlap independent jobs"): the scheduler happily
-    * interleaves both sides' jobs, so one side's stage tails back-fill
-    * the other's idle cores. Used where an entry composes two
-    * per-snapshot pipelines whose results only meet at the final join
-    * (q111/q124's release pair). Results are deterministic — each
-    * side's plan is unchanged; only job SUBMISSION overlaps.
-    *
-    * r14 advice hardening: (1) a dedicated unbounded cached pool, not
-    * the global ForkJoinPool — nested calls (q128/q129/q132 reach
-    * depth 2–3) block their submitting thread in Await, and on a fixed
-    * pool that is a starvation deadlock waiting to happen; daemon
-    * threads so the pool never blocks JVM exit. (2) BOTH futures are
-    * awaited even when the first fails, so a failing leg can never
-    * leave the other leg's Spark jobs running past the entry boundary
-    * (into Harness.settle or the next timed rep), and neither leg's
-    * failure is silently swallowed (the second rides as suppressed).
-    */
-  private[graft] lazy val driverPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-driver-overlap")
-        t.setDaemon(true)
-        t
-      }))
-
-  private[graft] def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val f1 = Future(fa)(driverPool)
-    val f2 = Future(fb)(driverPool)
-    val r1 = scala.util.Try(Await.result(f1, Duration.Inf))
-    val r2 = scala.util.Try(Await.result(f2, Duration.Inf))
-    (r1, r2) match {
-      case (scala.util.Success(a), scala.util.Success(b)) => (a, b)
-      case _ =>
-        val e = r1.failed.toOption.getOrElse(r2.failed.get)
-        r2.failed.toOption.filter(_ ne e).foreach(e.addSuppressed)
-        throw e
-    }
-  }
-
   private def q107(s: SparkSession, d: String): DataFrame =
     splitAssign(Tables.documents(s, d), tag = "q107cc")
       .orderBy(col("doc_id"))
@@ -2417,63 +2353,52 @@ object Dedup extends QueryModule {
   // APPEND-pure: gram postings and per-doc sizes are per-DOCUMENT rows,
   // so a delta batch's partial index simply unions in (delta-only
   // work), and the per-gram df collapses at probe time as one COUNT
-  // over the surviving postings. Exactly-once promotion is the same
-  // contract as the census (a doc in two batches would double its
-  // postings and inflate df); retraction is the exact inverse of its
-  // promote — drop the batch's partition rows, and the collapsed index
-  // over the survivors IS the index over the surviving documents.
-  // Cost shape at 100 TB: promote = the delta's gram scan + APPEND;
-  // retract = partition pruning over the batch_id-partitioned store.
+  // over the surviving postings. Exactly-once is the census contract:
+  // a document promoted under TWO batch ids doubles its postings
+  // (inflating df AND n_shared), so an at-least-once source needs the
+  // gated promote; same-batch replay is absorbed by the partition
+  // overwrite. Retraction drops the batch's partition rows, and the
+  // collapsed index over the survivors IS the index over the surviving
+  // documents. Cost shape at 100 TB: promote = the delta's gram scan +
+  // APPEND; retract = partition pruning over the batch_id-partitioned
+  // store.
 
-  /** Provenance-tagged containment-index partials. */
-  private[graft] final case class ContainIndexP(g: DataFrame,
-      sizes: DataFrame)
+  /** The containment state's relations: gram postings and per-doc
+    * sizes (shared by the word and line grains). */
+  private[graft] val ContainRelations = Seq(
+    "g" -> "doc_id BIGINT, gid BIGINT", "sizes" -> "doc_id BIGINT, ng BIGINT")
 
-  /** Build one batch's partials with the gram scan MATERIALIZED once
-    * (r13 attribution: the lazy `gramIds` plan was consumed by BOTH the
-    * postings and the sizes leg, so every store/write of a partial ran
-    * the batch's full gram expansion TWICE — q129's three-batch build
-    * re-expanded the whole corpus a second time for the sizes
-    * materialize alone). The release handle is for the streaming
-    * promote path (bounded per-batch scratch, the StreamingContain
-    * discipline); batch entries use [[buildContainIndexP]] and let the
-    * harness settle sweep. */
-  private[graft] def buildContainIndexPManaged(docs: DataFrame,
-      batchId: Long): (ContainIndexP, () => Unit) = {
-    val (gRaw, release) =
-      Scratch.materializeManaged(gramIds(docs), s"cip${batchId}_g")
-    val g = gRaw.toDF("doc_id", "gid")
-    (ContainIndexP(
-      g.withColumn("batch_id", lit(batchId)),
-      g.groupBy(col("doc_id")).agg(count(lit(1)).as("ng"))
-        .withColumn("batch_id", lit(batchId))), release)
+  /** Containment partials over a tagged `(doc_id, gid, batch_id)`
+    * postings relation, STORED once batch_id-partitioned as `name`:
+    * per-doc sizes derive from the stored postings (r13 attribution:
+    * a lazy postings plan consumed by both the postings and the sizes
+    * leg ran the batch's full gram expansion TWICE). The release handle
+    * is for the streaming promote's bounded per-batch scratch; batch
+    * entries let the harness sweep. */
+  private[graft] def containState(g: DataFrame, name: String)
+      : (PartitionedState, () => Unit) = {
+    val (stored, release) = Scratch.materializeManaged(
+      g.select(col("doc_id"), col("gid"), col("batch_id")), name,
+      Some("batch_id"))
+    val sg = stored.toDF("doc_id", "gid", "batch_id")
+    (PartitionedState(Seq("g" -> sg,
+      "sizes" -> sg.groupBy(col("doc_id"), col("batch_id"))
+        .agg(count(lit(1)).as("ng"))
+        .select(col("doc_id"), col("ng"), col("batch_id")))), release)
   }
 
-  private[graft] def buildContainIndexP(docs: DataFrame, batchId: Long)
-      : ContainIndexP =
-    buildContainIndexPManaged(docs, batchId)._1
-
-  /** Promote a delta batch: append its partials — no re-aggregation. */
-  private[graft] def mergeContainIndexP(idx: ContainIndexP,
-      deltaDocs: DataFrame, batchId: Long): ContainIndexP = {
-    val d = buildContainIndexP(deltaDocs, batchId)
-    ContainIndexP(idx.g.union(d.g), idx.sizes.union(d.sizes))
-  }
-
-  /** Retract (demote) one promoted batch — drops exactly the rows its
-    * promote appended; over a batch_id-partitioned store this filter is
-    * partition pruning (ContainmentSpec pins it). */
-  private[graft] def retractContainIndexP(idx: ContainIndexP,
-      batchId: Long): ContainIndexP =
-    ContainIndexP(idx.g.filter(col("batch_id") =!= batchId),
-      idx.sizes.filter(col("batch_id") =!= batchId))
+  /** The word-grain containment family. */
+  private[graft] val containFamily: PartitionedState.Family =
+    new PartitionedState.Family(ContainRelations, (docs, batchId) =>
+      containState(gramIds(docs).withColumn("batch_id", batchId),
+        PartitionedState.scratchName("cip", batchId)))
 
   /** Collapse the surviving partials to the probe-ready index: df is
     * ONE count over the stored postings (the census SUM-at-probe-time
     * discipline — promote stays delta-only). */
-  private[graft] def collapseContain(p: ContainIndexP): ContainIndex = {
-    val g = p.g.drop("batch_id")
-    ContainIndex(g, p.sizes.drop("batch_id"),
+  private[graft] def collapseContain(p: PartitionedState): ContainIndex = {
+    val g = p("g").drop("batch_id")
+    ContainIndex(g, p("sizes").drop("batch_id"),
       g.groupBy(col("gid")).agg(count(lit(1)).as("df")))
   }
 
@@ -2493,27 +2418,16 @@ object Dedup extends QueryModule {
     // whole index chain — overlap it on a driver thread (guide §2.6).
     // r15 optimization (guide §6 — scans, not threads): the frozen
     // batch (m<3 → batch 0) and the promoted delta (m∈{3,4} → batch 1)
-    // previously ran as TWO full corpus gram scans whose partials were
-    // materialized separately and re-materialized merged; batch_id is
-    // a per-row function of doc_id, so ONE scan tagged with batch_id
+    // previously ran as TWO full corpus gram scans; batch_id is a
+    // per-row function of doc_id, so ONE scan tagged with batch_id
     // produces the identical row set — landed directly in the
-    // batch_id-partitioned store (the StreamingPromote layout: the
+    // batch_id-partitioned store (the streaming twin's layout: the
     // promote IS its own partition, merged ≡ the filter-free read of
-    // both partitions), with per-doc sizes derived from the stored
-    // postings rather than a second text pass.
-    val (live, gp) = inParallel({
-      val g = Scratch.materializePartitioned(
-        gramIds(docs.filter(m < 5)).toDF("doc_id", "gid")
-          .withColumn("batch_id",
-            when(col("doc_id") % 7 < 3, lit(0L)).otherwise(lit(1L))),
-        "q128_g", "batch_id")
-      ContainIndexP(g,
-        Scratch.materializePartitioned(
-          g.groupBy(col("doc_id"), col("batch_id"))
-            .agg(count(lit(1)).as("ng"))
-            .select(col("doc_id"), col("ng"), col("batch_id")),
-          "q128_sz", "batch_id"))
-    }, probeGramsOf(docs.filter(m < 5), docs.filter(m >= 5), "q128"))
+    // both partitions).
+    val (live, gp) = inParallel(
+      containState(gramIds(docs.filter(m < 5)).withColumn("batch_id",
+        when(m < 3, lit(0L)).otherwise(lit(1L))), "q128_g")._1,
+      probeGramsOf(docs.filter(m < 5), docs.filter(m >= 5), "q128"))
     probeFromG(collapseContain(live), gp, "q128")
   }
 
@@ -2529,32 +2443,15 @@ object Dedup extends QueryModule {
   private def q129(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 7
-    // same r14 overlap as q128: probe scan beside the build chain.
-    // r15 optimization (guide §6): the three batch builds previously
-    // ran as THREE full corpus gram scans (independent doc slices,
-    // overlapped on driver threads — overlap hides serial latency but
-    // not I/O); batch_id is a per-row function of doc_id, so ONE scan
-    // tagged with batch_id produces the identical row set, landed
-    // directly in the batch_id-partitioned store. The union algebra is
-    // untouched — the tagged single scan IS the union of the per-batch
-    // partials (disjoint, exhaustive slices of m < 5); sizes derive
-    // from the stored postings, not a second text pass.
-    val (stored, gp) = inParallel({
-      val sg = Scratch.materializePartitioned(
-        gramIds(docs.filter(m < 5)).toDF("doc_id", "gid")
-          .withColumn("batch_id",
-            when(col("doc_id") % 7 < 2, lit(0L))
-              .when(col("doc_id") % 7 < 4, lit(1L)).otherwise(lit(2L))),
-        "q129_g", "batch_id")
-      val ssz = Scratch.materializePartitioned(
-        sg.groupBy(col("doc_id"), col("batch_id"))
-          .agg(count(lit(1)).as("ng"))
-          .select(col("doc_id"), col("ng"), col("batch_id")),
-        "q129_sz", "batch_id")
-      ContainIndexP(sg, ssz)
-    }, probeGramsOf(docs.filter(m < 5), docs.filter(m >= 5), "q129"))
-    val demoted = retractContainIndexP(stored, 2L)
-    probeFromG(collapseContain(demoted), gp, "q129")
+    // same r14 overlap and r15 one tagged scan as q128: the three
+    // batches are disjoint, exhaustive slices of m < 5, so the tagged
+    // single scan IS the union of the per-batch partials
+    val (stored, gp) = inParallel(
+      containState(gramIds(docs.filter(m < 5)).withColumn("batch_id",
+        when(m < 2, lit(0L)).when(m < 4, lit(1L)).otherwise(lit(2L))),
+        "q129_g")._1,
+      probeGramsOf(docs.filter(m < 5), docs.filter(m >= 5), "q129"))
+    probeFromG(collapseContain(stored.retract(2L)), gp, "q129")
   }
 
   /** The lifecycle entries' shared probe-side gram scan: snippets of
@@ -2571,8 +2468,8 @@ object Dedup extends QueryModule {
       .toDF("doc_id", "gid")
   }
 
-  /** The probe over a materialized probe-gram relation. */
-  private def probeFromG(idx: ContainIndex, gp: DataFrame,
+  /** The probe over a probe-gram relation `(doc_id, gid)`. */
+  private[graft] def probeFromG(idx: ContainIndex, gp: DataFrame,
       tag: String): DataFrame =
     probeContain(idx, gp,
       gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), tag)

@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Cluster-shape helpers for the query catalog: parallelism is derived
   * from the session (never a literal core count), and multi-leg subtrees
@@ -105,15 +106,7 @@ object Scratch {
     * fails loudly.
     */
   def materialize(df: DataFrame, name: String): DataFrame =
-    df.sparkSession.conf.getOption("graft.scratch.dir") match {
-      case Some(_) =>
-        val root = scratchRoot(df)
-        installCleanup(root)
-        val path = Paths.get(root, name).toString
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      case None => df.localCheckpoint()
-    }
+    materializeManaged(df, name, None)._1
 
   /** [[materialize]] with an explicit RELEASE handle — for iterative
     * kernels (q93's rank rounds, the CC label ping-pong) whose round-k−1
@@ -135,13 +128,44 @@ object Scratch {
     */
   def materializeManaged(df: DataFrame, name: String)
       : (DataFrame, () => Unit) =
+    materializeManaged(df, name, None)
+
+  /** [[materialize]] with a PARTITION column — the scratch half of
+    * [[PartitionedState.stored]] (and q124's split manifest): over a
+    * batch_id-partitioned store the retraction filter
+    * `batch_id =!= B` is partition PRUNING — the retracted batch's
+    * files are never opened, and physically dropping the batch is one
+    * directory delete. The partition column is read back as part of
+    * the schema (cast back to the written dtype: partition-value
+    * inference would otherwise narrow a long batch_id to int, changing
+    * the schema between scratch modes).
+    *
+    * localCheckpoint mode keeps the same semantics minus the pruning —
+    * correctness never depends on the layout, only retraction COST does.
+    */
+  def materializePartitioned(df: DataFrame, name: String, partCol: String)
+      : DataFrame =
+    materializeManaged(df, name, Some(partCol))._1
+
+  /** The one materialization: [[materializeManaged]], partitioned by
+    * `partCol` when given ([[materializePartitioned]]). */
+  private[graft] def materializeManaged(df: DataFrame, name: String,
+      partCol: Option[String]): (DataFrame, () => Unit) =
     df.sparkSession.conf.getOption("graft.scratch.dir") match {
       case Some(_) =>
         val root = scratchRoot(df)
         installCleanup(root)
         val path = Paths.get(root, name).toString
-        df.write.mode("overwrite").parquet(path)
-        (df.sparkSession.read.parquet(path), () => deleteTree(path))
+        val w = df.write.mode("overwrite")
+        partCol.fold(w)(w.partitionBy(_)).parquet(path)
+        val back = df.sparkSession.read.parquet(path)
+        (partCol.fold(back) { c =>
+          back.withColumn(c, col(c).cast(df.schema(c).dataType))
+            // partitionBy moves partCol to the schema tail on read-back;
+            // restore the written column order so both scratch modes
+            // present one shape
+            .select(df.columns.map(col).toIndexedSeq: _*)
+        }, () => deleteTree(path))
       case None =>
         val cp = df.localCheckpoint()
         val release = () => cp.queryExecution.logical match {
@@ -150,39 +174,5 @@ object Scratch {
           case _ => () // unexpected plan shape: fall back to GC reclaim
         }
         (cp, release)
-    }
-
-  /** [[materialize]] with a PARTITION column — for stored state whose
-    * lifecycle operations are per-partition, e.g. the provenance-tagged
-    * dedup indexes (q102/q103) whose RETRACTION of batch B is
-    * `filter(batch_id =!= B)`: over a batch_id-partitioned store that
-    * filter is partition PRUNING — the retracted batch's files are
-    * never opened, and physically dropping the batch is one directory
-    * delete. The partition column is read back as part of the schema
-    * (cast back to the written dtype: partition-value inference would
-    * otherwise narrow a long batch_id to int, changing the schema
-    * between scratch modes).
-    *
-    * localCheckpoint mode keeps the same semantics minus the pruning —
-    * correctness never depends on the layout, only retraction COST does.
-    */
-  def materializePartitioned(df: DataFrame, name: String, partCol: String)
-      : DataFrame =
-    df.sparkSession.conf.getOption("graft.scratch.dir") match {
-      case Some(_) =>
-        val root = scratchRoot(df)
-        installCleanup(root)
-        val path = Paths.get(root, name).toString
-        df.write.mode("overwrite").partitionBy(partCol).parquet(path)
-        val written = df.schema(partCol).dataType
-        df.sparkSession.read.parquet(path)
-          .withColumn(partCol,
-            org.apache.spark.sql.functions.col(partCol).cast(written))
-          // partitionBy moves partCol to the schema tail on read-back;
-          // restore the written column order so both scratch modes
-          // present one shape
-          .select(df.columns.map(org.apache.spark.sql.functions.col)
-            .toIndexedSeq: _*)
-      case None => df.localCheckpoint()
     }
 }

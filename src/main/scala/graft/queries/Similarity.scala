@@ -563,43 +563,28 @@ object Similarity extends QueryModule {
     (e, seededCent(e))
   }
 
-  /** Provenance-tagged frozen semantic index — the RETRACTABLE variant
-    * of [[SemIndex]] (r09 verdict #1, the semantic twin of
-    * `Dedup.LexIndexP`): every inverted-list row carries the batch_id
-    * of the promote that appended it. The lists were already
-    * append-only — assignment under a FROZEN quantizer is per-vector —
-    * so provenance is the only thing retraction was missing: demoting
-    * batch B is `filter(batch_id =!= B)`, exactly the rows B's promote
-    * appended, and over a batch_id-partitioned store it is partition
-    * pruning (B's files never open; dropping them is one directory
-    * delete). The quantizer is shared state, not per-batch: retraction
-    * never touches it, the same way promote never retrains it.
+  /** The provenance-tagged frozen semantic index — the RETRACTABLE
+    * variant of [[SemIndex]] (r09 verdict #1, the semantic twin of
+    * `Dedup.lexFamily`) as a [[PartitionedState]] family: every
+    * inverted-list row carries the batch_id of the promote that
+    * appended it. The lists were already append-only — assignment under
+    * a FROZEN quantizer is per-vector — so provenance is the only thing
+    * retraction was missing. The quantizer `cent` is shared state
+    * OUTSIDE the partitioned relations: retraction never touches it,
+    * the same way promote never retrains it.
     */
-  private[graft] final case class SemIndexP(cent: DataFrame, lists: DataFrame)
+  private[graft] def semFamily(cent: DataFrame): PartitionedState.Family =
+    PartitionedState.family("lists" ->
+        "idx_id BIGINT, cid BIGINT, i_emb ARRAY<FLOAT>, i_nrm DOUBLE") {
+      (e, batchId) =>
+        PartitionedState.tag(Seq("lists" -> assignLists(e, cent)), batchId)
+    }
 
-  private[graft] def buildSemIndexP(e: DataFrame, cent: DataFrame,
-      batchId: Long): SemIndexP =
-    SemIndexP(cent, assignLists(e, cent).withColumn("batch_id", lit(batchId)))
-
-  /** Promote under provenance: assign ONLY the delta under the frozen
-    * quantizer, tag, append — [[mergeSemIndex]]'s cost, plus one lit.
-    */
-  private[graft] def mergeSemIndexP(idx: SemIndexP, deltaE: DataFrame,
-      batchId: Long): SemIndexP =
-    SemIndexP(idx.cent, idx.lists.union(
-      assignLists(deltaE, idx.cent).withColumn("batch_id", lit(batchId))))
-
-  /** Retract (demote) one promoted batch — the exact inverse of its
-    * promote. Equality with lists REBUILT without the batch is the
-    * q103 oracle's hash gate.
-    */
-  private[graft] def retractSemIndexP(idx: SemIndexP, batchId: Long)
-      : SemIndexP =
-    SemIndexP(idx.cent, idx.lists.filter(col("batch_id") =!= batchId))
-
-  /** Collapse to the probe shape: provenance off, [[probeSem]] on. */
-  private[graft] def collapseSem(idx: SemIndexP): SemIndex =
-    SemIndex(idx.cent, idx.lists.drop("batch_id"))
+  /** Collapse to the probe shape under the frozen quantizer: provenance
+    * off, [[probeSem]] on. */
+  private[graft] def collapseSem(cent: DataFrame, idx: PartitionedState)
+      : SemIndex =
+    SemIndex(cent, idx("lists").drop("batch_id"))
 
   /** Semantic frozen-index RETRACTION equivalence (q103) — q102's
     * story for the embedding signal: bootstrap the inverted lists over
@@ -616,16 +601,13 @@ object Similarity extends QueryModule {
     val cent = seededCent(e)
     val q3 = DeltaMax * 3 / 4
     val h = DeltaMax / 2
-    val b0 = buildSemIndexP(e.filter(col("vec_id") >= DeltaMax), cent, 0L)
-    val p1 = mergeSemIndexP(b0,
-      e.filter(col("vec_id") >= q3 && col("vec_id") < DeltaMax), 1L)
-    val p2 = mergeSemIndexP(p1,
-      e.filter(col("vec_id") >= h && col("vec_id") < q3), 2L)
-    val stored = SemIndexP(
-      Scratch.materialize(p2.cent, "q103_cent"),
-      Scratch.materializePartitioned(p2.lists, "q103_lists", "batch_id"))
-    val demoted = retractSemIndexP(stored, 2L)
-    probeSem(collapseSem(demoted), e.filter(col("vec_id") < h))
+    val fam = semFamily(cent)
+    val p2 = fam(e.filter(col("vec_id") >= DeltaMax), 0L)
+      .union(fam(e.filter(col("vec_id") >= q3 && col("vec_id") < DeltaMax), 1L))
+      .union(fam(e.filter(col("vec_id") >= h && col("vec_id") < q3), 2L))
+    val storedCent = Scratch.materialize(cent, "q103_cent")
+    probeSem(collapseSem(storedCent, p2.stored("q103").retract(2L)),
+      e.filter(col("vec_id") < h))
   }
 
   // lazy: the q99Sql/q101Sql discipline (interpolates SemTau)

@@ -142,21 +142,18 @@ object SuffixDedup extends QueryModule {
     // whole pipeline (8 bytes/token as one long array per doc) — both
     // the gram census below and the pruned wide emit re-read it, so the
     // corpus tokenize+hash runs once
-    val tTids = System.nanoTime()
-    val tidsByDoc = Scratch.materialize(
-      docs.select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          (id, WordRe.findAllIn(text).map(t =>
-            org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-              org.apache.spark.unsafe.types.UTF8String.fromString(t), 42L))
-            .toArray)
-        }
-        .toDF("doc_id", "tids"),
-      "qsa_tids")
-    if (s.conf.getOption("graft.engine.timing").contains("true"))
-      System.err.println(
-        f"[timing] sfx tidsByDoc ${(System.nanoTime() - tTids) / 1e9}%.3fs")
+    val tidsByDoc = graft.core.Phase.timed(s, "[timing] sfx tidsByDoc")(
+      Scratch.materialize(
+        docs.select(col("doc_id").cast("long"), col("text"))
+          .as[(Long, String)]
+          .map { case (id, text) =>
+            (id, WordRe.findAllIn(text).map(t =>
+              org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
+                org.apache.spark.unsafe.types.UTF8String.fromString(t), 42L))
+              .toArray)
+          }
+          .toDF("doc_id", "tids"),
+        "qsa_tids"))
     // SINGLE-DOC-GRAM PRUNE (r09, measured): a position whose
     // MinSpan-gram occurs in only ONE document can never reach
     // ell ≥ MinSpan — every LCP ≥ MinSpan partner shares the exact

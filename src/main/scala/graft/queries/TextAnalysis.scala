@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.Tables
+import graft.core.Phase
+import graft.core.Overlap.inParallel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1121,33 +1123,24 @@ object TextAnalysis extends QueryModule {
     } finally s.conf.set(key, saved)
   }
 
-  /** Opt-in phase timing (`graft.engine.timing=true`, the GraphRunner
-    * convention): wall time per training phase to stderr. Measured
-    * attribution lives in BASELINE.md (r07 verdict #7): the loop is
-    * job-fixed-cost-bound — a 4/8/16/32 partition sweep is flat-to-
-    * worse, and fusing the per-round gradient into the line-search job
-    * (4 decimal gradients per probe) was measured SLOWER than the
-    * split shape, so this spelling is the floor.
+  /** Phases are timed under `[q73-timing]`. Measured attribution lives
+    * in BASELINE.md (r07 verdict #7): the loop is job-fixed-cost-bound —
+    * a 4/8/16/32 partition sweep is flat-to-worse, and fusing the
+    * per-round gradient into the line-search job (4 decimal gradients
+    * per probe) was measured SLOWER than the split shape, so this
+    * spelling is the floor.
     */
-  private def clsTimed[A](s: SparkSession, phase: String)(f: => A): A =
-    if (!s.conf.getOption("graft.engine.timing").exists(_.toBoolean)) f
-    else {
-      val t0 = System.nanoTime()
-      try f
-      finally System.err.println(
-        f"[q73-timing] $phase ${(System.nanoTime() - t0) / 1e9}%.3fs")
-    }
-
   private def clsTrainNarrow(s: SparkSession, feats: DataFrame,
       labels: DataFrame): (Array[Double], Seq[Double]) = {
     import s.implicits._
-    val f = clsTimed(s, "feats-materialize")(Scratch.materialize(
-      feats.join(labels, "doc_id").repartition(
+    val f = Phase.timed(s, "[q73-timing] feats-materialize")(
+      Scratch.materialize(feats.join(labels, "doc_id").repartition(
         s.conf.getOption("graft.q73.par").map(_.toInt).getOrElse(4)),
-      "q73_feats"))
-    val Seq((n, nPos)) = clsTimed(s, "label-counts")(labels
-      .agg(count(lit(1)).cast("double"), sum(col("y")).cast("double"))
-      .as[(Double, Double)].collect().toSeq)
+        "q73_feats"))
+    val Seq((n, nPos)) = Phase.timed(s, "[q73-timing] label-counts")(
+      labels
+        .agg(count(lit(1)).cast("double"), sum(col("y")).cast("double"))
+        .as[(Double, Double)].collect().toSeq)
 
     def docOf(w: Array[Double]) = {
       val wDf = broadcast(
@@ -1195,13 +1188,14 @@ object TextAnalysis extends QueryModule {
     w(ClsD) =
       if (nPos <= 0.0 || nPos >= n) 0.0
       else math.log(nPos / (n - nPos))
-    var loss = clsTimed(s, "probe0")(lossesOf(Seq(w, w, w, w)).head)
+    var loss = Phase.timed(s, "[q73-timing] probe0")(
+      lossesOf(Seq(w, w, w, w)).head)
     val losses = Seq.newBuilder[Double]
     losses += loss
     var lr = ClsLr
     var stalled = false
     for (_ <- 1 to ClsRounds if !stalled) {
-      val grad = clsTimed(s, "grad")(f.join(docOf(w)
+      val grad = Phase.timed(s, "[q73-timing] grad")(f.join(docOf(w)
           .select(col("doc_id"), col("p"), col("y").as("yd")), "doc_id")
         .groupBy(col("idx"))
         .agg(sum((col("x") * (col("p") - col("yd"))).cast("decimal(30,15)"))
@@ -1216,7 +1210,8 @@ object TextAnalysis extends QueryModule {
       var accepted = false
       while (!accepted && tries < 3) {
         val steps = Seq(lr * 4, lr * 1.5, lr, lr / 4)
-        val ls = clsTimed(s, "linesearch")(lossesOf(steps.map(candAt)))
+        val ls = Phase.timed(s, "[q73-timing] linesearch")(
+          lossesOf(steps.map(candAt)))
         // 1e-9 acceptance margin: the probe losses are double sums
         // (shuffle-order jitter ~1e-15 relative), so require a real
         // improvement — the trajectory then depends only on the
@@ -1767,64 +1762,52 @@ object TextAnalysis extends QueryModule {
   // partials; the semantic index by per-cluster append; the census is
   // SUM-mergeable — per-batch distinct-doc counts and per-source doc
   // counts ADD exactly, PROVIDED promote batches partition the
-  // documents (a doc in two batches would double-count; exactly-once
-  // promotion is the same contract StreamingPromote's doc gate
-  // enforces on the lex index). Retraction is then the exact inverse
-  // of its promote: drop the batch's partition rows, and the summed
-  // census over the survivors IS the census over the surviving
+  // documents. Exactly-once is therefore the correctness requirement,
+  // not hygiene: a document promoted under TWO batch ids double-counts
+  // its lines and can push a line over the chrome threshold, so an
+  // at-least-once source needs the gated promote (same-batch replay is
+  // absorbed by the partition overwrite). Retraction is the exact
+  // inverse of its promote: drop the batch's partition rows, and the
+  // summed census over the survivors IS the census over the surviving
   // documents — a re-crawled source's chrome can be demoted without
   // re-counting the corpus. Cost shape at 100 TB: promote = build the
   // delta batch's partial census (delta-only work) + APPEND; retract =
   // partition pruning over the batch_id-partitioned store.
 
-  /** Provenance-tagged census partials: per-batch (source, lmd5, cnt)
-    * distinct-doc counts and per-batch (source, n_docs). */
-  private[graft] final case class BoilerIndexP(
-      counts: DataFrame, srcn: DataFrame)
+  private val CountsDdl = "source STRING, lmd5 STRING, cnt BIGINT"
+  private val SrcnDdl = "source STRING, n_docs BIGINT"
 
-  private[graft] def buildBoilerIndexP(docs: DataFrame, batchId: Long)
-      : BoilerIndexP = {
-    val pd = pageDocs(docs)
-    BoilerIndexP(
-      lineDigests(pd)
-        .groupBy(col("source"), col("lmd5"))
-        .agg(countDistinct(col("doc_id")).as("cnt"))
-        .withColumn("batch_id", lit(batchId)),
-      pd.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-        .withColumn("batch_id", lit(batchId)))
-  }
-
-  /** Promote a delta batch: append its partial census — no
-    * re-aggregation (the SUM collapse defers to probe time, where the
-    * group is batches-per-key, not docs-per-key). */
-  private[graft] def mergeBoilerIndexP(idx: BoilerIndexP,
-      deltaDocs: DataFrame, batchId: Long): BoilerIndexP = {
-    val d = buildBoilerIndexP(deltaDocs, batchId)
-    BoilerIndexP(idx.counts.union(d.counts), idx.srcn.union(d.srcn))
-  }
-
-  /** Retract (demote) one promoted batch — drops exactly the rows its
-    * promote appended; over a batch_id-partitioned store this filter
-    * is partition pruning (BoilerplateSpec pins it). */
-  private[graft] def retractBoilerIndexP(idx: BoilerIndexP, batchId: Long)
-      : BoilerIndexP =
-    BoilerIndexP(idx.counts.filter(col("batch_id") =!= batchId),
-      idx.srcn.filter(col("batch_id") =!= batchId))
+  /** The census family: per-batch (source, lmd5, cnt) distinct-doc
+    * counts and per-batch (source, n_docs). */
+  private[graft] val censusFamily: PartitionedState.Family =
+    PartitionedState.family("counts" -> CountsDdl, "srcn" -> SrcnDdl) {
+      (docs, batchId) =>
+        val pd = pageDocs(docs)
+        PartitionedState(Seq(
+          "counts" -> lineDigests(pd).withColumn("batch_id", batchId)
+            .groupBy(col("source"), col("lmd5"), col("batch_id"))
+            .agg(countDistinct(col("doc_id")).as("cnt"))
+            .select(col("source"), col("lmd5"), col("cnt"), col("batch_id")),
+          "srcn" -> pd.withColumn("batch_id", batchId)
+            .groupBy(col("source"), col("batch_id"))
+            .agg(count(lit(1)).as("n_docs"))
+            .select(col("source"), col("n_docs"), col("batch_id"))))
+    }
 
   /** SUM-collapse the surviving partials and threshold — the stored
     * state's census view, (source, lmd5, cnt, n_docs) rows exactly
     * like [[boilerCensus]] over the equivalent document set. */
-  private[graft] def collapsedCensus(idx: BoilerIndexP): DataFrame = {
-    val srcN = idx.srcn.groupBy(col("source"))
+  private[graft] def collapsedCensus(idx: PartitionedState): DataFrame = {
+    val srcN = idx("srcn").groupBy(col("source"))
       .agg(sum(col("n_docs")).as("n_docs"))
-    idx.counts
+    idx("counts")
       .groupBy(col("source"), col("lmd5")).agg(sum(col("cnt")).as("cnt"))
       .join(broadcast(srcN), "source")
       .where(boilerThreshold)
   }
 
   /** Collapse to the per-source chrome sets — the strip/probe shape. */
-  private[graft] def collapseBoiler(idx: BoilerIndexP): DataFrame =
+  private[graft] def collapseBoiler(idx: PartitionedState): DataFrame =
     collapsedCensus(idx)
       .groupBy(col("source")).agg(collect_set(col("lmd5")).as("bset"))
 
@@ -1858,13 +1841,10 @@ object TextAnalysis extends QueryModule {
   private def q115(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 7
-    val b0 = buildBoilerIndexP(docs.filter(m < 3), 0L)
-    // materialized = the stored census: the merge consumes INDEX STATE
-    // from disk, provably not the frozen batch's text
-    val stored = BoilerIndexP(
-      Scratch.materialize(b0.counts, "q115_counts"),
-      Scratch.materialize(b0.srcn, "q115_srcn"))
-    val merged = mergeBoilerIndexP(stored, docs.filter(m >= 3 && m < 5), 1L)
+    // stored = the census on disk: the merge consumes INDEX STATE, provably
+    // not the frozen batch's text
+    val merged = censusFamily(docs.filter(m < 3), 0L).stored("q115")
+      .union(censusFamily(docs.filter(m >= 3 && m < 5), 1L))
     collapsedCensus(merged)
       .select(col("source"), col("lmd5"),
         col("cnt").cast("long").as("cnt"),
@@ -1884,16 +1864,10 @@ object TextAnalysis extends QueryModule {
   private def q116(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 7
-    val p2 = mergeBoilerIndexP(
-      mergeBoilerIndexP(
-        buildBoilerIndexP(docs.filter(m < 2), 0L),
-        docs.filter(m >= 2 && m < 4), 1L),
-      docs.filter(m === 4), 2L)
-    val stored = BoilerIndexP(
-      Scratch.materializePartitioned(p2.counts, "q116_counts", "batch_id"),
-      Scratch.materializePartitioned(p2.srcn, "q116_srcn", "batch_id"))
-    val demoted = retractBoilerIndexP(stored, 2L)
-    collapsedCensus(demoted)
+    val p2 = censusFamily(docs.filter(m < 2), 0L)
+      .union(censusFamily(docs.filter(m >= 2 && m < 4), 1L))
+      .union(censusFamily(docs.filter(m === 4), 2L))
+    collapsedCensus(p2.stored("q116").retract(2L))
       .select(col("source"), col("lmd5"),
         col("cnt").cast("long").as("cnt"),
         col("n_docs").cast("long").as("n_docs"))
@@ -2865,19 +2839,6 @@ object TextAnalysis extends QueryModule {
       boiler.select(col("source"), explode(col("bset")).as("lmd5"))))
   }
 
-  /** The tagged per-batch surviving-line partials over a stored tagged
-    * line relation — [[lineGramIdsOfRel]] per batch in ONE plan:
-    * batch_id re-derives from doc_id after the per-doc distinct
-    * (well-defined because a doc is in exactly one batch), so the
-    * result is the union of the per-batch partials without re-reading
-    * text. */
-  private def taggedLineGrams(li: DataFrame, chromePairs: DataFrame,
-      batchCol: Column): DataFrame =
-    li.join(chromePairs, Seq("source", "lmd5"), "left_anti")
-      .select(col("doc_id"), Dedup.hex12ToLong(col("lmd5")).as("gid"))
-      .distinct()
-      .withColumn("batch_id", batchCol)
-
   /** Per-doc DISTINCT surviving-line gids (q64 48-bit convention —
     * 8-byte keys across every probe shuffle) over a `(source, doc_id,
     * lmd5)` line relation, anti-joined against the chrome pairs. ONE
@@ -2961,37 +2922,39 @@ object TextAnalysis extends QueryModule {
   // postings algebra is the word grain's APPEND-pure one: per-doc
   // surviving-line gids and sizes are per-DOCUMENT rows, so promote =
   // the delta's page-line scan + APPEND and retract = partition
-  // pruning over the batch_id-partitioned store. The NEW wrinkle is
-  // the chrome census: it is a FROZEN INPUT, captured over the
-  // BOOTSTRAP batch at publish time and applied unchanged to every
-  // delta — exactly StreamingBoiler's census-drift horizon (chrome
-  // that emerges only after the freeze indexes un-stripped until a
-  // re-freeze). Both entries' oracles therefore spell the census over
-  // the bootstrap population ONLY: merged ≡ rebuilt and demoted ≡
-  // rebuilt-without are proven UNDER the frozen chrome — the contract
-  // a production promote actually runs, not a census rebuilt per
-  // delta (which would be corpus-linear work on every micro-batch).
+  // pruning over the batch_id-partitioned store; same exactly-once
+  // note as the word grain (a document promoted under two batch ids
+  // doubles its line postings, so at-least-once sources need the gated
+  // promote). The NEW wrinkle is the chrome census: it is a FROZEN
+  // INPUT, captured over the BOOTSTRAP batch at publish time and
+  // applied unchanged to every delta — exactly StreamingBoiler's
+  // census-drift horizon (chrome that emerges only after the freeze
+  // indexes un-stripped until a re-freeze). Both entries' oracles
+  // therefore spell the census over the bootstrap population ONLY:
+  // merged ≡ rebuilt and demoted ≡ rebuilt-without are proven UNDER the
+  // frozen chrome — the contract a production promote actually runs,
+  // not a census rebuilt per delta (which would be corpus-linear work
+  // on every micro-batch).
 
-  /** One batch's line-grain partials under a FROZEN chrome set, the
-    * line scan materialized once (both partial legs read the stored
-    * scan — the buildContainIndexPManaged discipline); the release
-    * handle is for the streaming promote path's bounded per-batch
-    * scratch. */
-  private[graft] def buildLineContainIndexPManaged(docs: DataFrame,
-      chrome: DataFrame, batchId: Long, tag: String)
-      : (Dedup.ContainIndexP, () => Unit) = {
-    val (gRaw, release) = Scratch.materializeManaged(
-      lineGramIds(pageDocs(docs), chrome), s"${tag}_lcp${batchId}_g")
-    val g = gRaw.toDF("doc_id", "gid")
-    (Dedup.ContainIndexP(
-      g.withColumn("batch_id", lit(batchId)),
-      g.groupBy(col("doc_id")).agg(count(lit(1)).as("ng"))
-        .withColumn("batch_id", lit(batchId))), release)
-  }
+  /** Line-grain containment partials over a tagged `(source, doc_id,
+    * lmd5, batch_id)` line relation under a FROZEN chrome set, stored
+    * as `name` ([[Dedup.containState]]): batch_id rides through the
+    * per-doc distinct (well-defined — a doc is in exactly one batch). */
+  private[graft] def lineContainState(li: DataFrame, chrome: DataFrame,
+      name: String): (PartitionedState, () => Unit) =
+    Dedup.containState(
+      li.join(chrome, Seq("source", "lmd5"), "left_anti")
+        .select(col("doc_id"), Dedup.hex12ToLong(col("lmd5")).as("gid"),
+          col("batch_id"))
+        .distinct(), name)
 
-  private[graft] def buildLineContainIndexP(docs: DataFrame,
-      chrome: DataFrame, batchId: Long, tag: String): Dedup.ContainIndexP =
-    buildLineContainIndexPManaged(docs, chrome, batchId, tag)._1
+  /** The line-grain containment family under a frozen chrome. */
+  private[graft] def lineContainFamily(chrome: DataFrame)
+      : PartitionedState.Family =
+    new PartitionedState.Family(Dedup.ContainRelations, (docs, batchId) =>
+      lineContainState(
+        lineDigests(pageDocs(docs)).withColumn("batch_id", batchId), chrome,
+        PartitionedState.scratchName("lcp", batchId)))
 
   /** The lifecycle entries' shared probe-side line scan: constructed
     * quotes of `quoteBase` parents ∪ the unseen `rest` docs, reduced to
@@ -3009,12 +2972,10 @@ object TextAnalysis extends QueryModule {
       .toDF("doc_id", "gid")
   }
 
-  /** The probe over a materialized probe-gram relation. */
-  private def probeFromG(idx: Dedup.ContainIndex, gp: DataFrame,
+  /** The probe over a probe line-gram relation `(doc_id, gid)`. */
+  private[graft] def probeFromG(idx: Dedup.ContainIndex, gp: DataFrame,
       tag: String): DataFrame =
-    Dedup.probeContain(idx, gp,
-      gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), tag)
-      .withColumnRenamed("n_grams", "n_lines")
+    Dedup.probeFromG(idx, gp, tag).withColumnRenamed("n_grams", "n_lines")
 
   /** Line-containment MERGE equivalence (q131): freeze the chrome
     * census over the bootstrap batch (doc_id ≡ 0,1,2 mod 7), build its
@@ -3044,20 +3005,12 @@ object TextAnalysis extends QueryModule {
     val (li, chrome) = taggedLinesAndChrome(docs.filter(m < 5), batchCol,
       col("batch_id") === 0L, "q131")
     // r14 optimization: the probe-side line scan needs only the frozen
-    // chrome, so it overlaps the store/collapse chain on a driver thread
-    val (live, gp) = Dedup.inParallel({
-      // the promote LANDS in the store before any probe (q128's
-      // contract); sizes derive from the stored postings
-      val sg = Scratch.materialize(
-        taggedLineGrams(li, chrome, batchCol), "q131_mg")
-      Dedup.ContainIndexP(sg,
-        Scratch.materialize(
-          sg.groupBy(col("doc_id"), col("batch_id"))
-            .agg(count(lit(1)).as("ng"))
-            .select(col("doc_id"), col("ng"), col("batch_id")),
-          "q131_msz"))
-    }, probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
-      "q131"))
+    // chrome, so it overlaps the store/collapse chain on a driver thread;
+    // the promote LANDS in the store before any probe (q128's contract)
+    val (live, gp) = inParallel(
+      lineContainState(li, chrome, "q131_g")._1,
+      probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
+        "q131"))
     probeFromG(Dedup.collapseContain(live), gp, "q131")
   }
 
@@ -3087,19 +3040,11 @@ object TextAnalysis extends QueryModule {
       col("batch_id") === 0L, "q132")
     // r14 optimization: probe-side scan overlaps the store chain (it
     // needs only the frozen chrome)
-    val (stored, gp) = Dedup.inParallel({
-      val sg = Scratch.materializePartitioned(
-        taggedLineGrams(li, chrome, batchCol), "q132_g", "batch_id")
-      val ssz = Scratch.materializePartitioned(
-        sg.groupBy(col("doc_id"), col("batch_id"))
-          .agg(count(lit(1)).as("ng"))
-          .select(col("doc_id"), col("ng"), col("batch_id")),
-        "q132_sz", "batch_id")
-      Dedup.ContainIndexP(sg, ssz)
-    }, probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
-      "q132"))
-    val demoted = Dedup.retractContainIndexP(stored, 2L)
-    probeFromG(Dedup.collapseContain(demoted), gp, "q132")
+    val (stored, gp) = inParallel(
+      lineContainState(li, chrome, "q132_g")._1,
+      probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
+        "q132"))
+    probeFromG(Dedup.collapseContain(stored.retract(2L)), gp, "q132")
   }
 
   /** The two-population line-grain probe oracle under a FROZEN chrome
@@ -3188,40 +3133,37 @@ object TextAnalysis extends QueryModule {
   // keep the 8-byte-gid width. Moved rows keep their origin batch_id,
   // so retraction (partition prune) still composes after a re-freeze.
 
-  /** Line-containment store WITH the quarantined chrome complement —
-    * both sides `(source, doc_id, gid, batch_id)`, append-pure per
-    * promoted batch under the chrome frozen at that batch's promote. */
-  private[graft] final case class LineContainStateP(
-      surv: DataFrame, strip: DataFrame)
-
-  /** One batch's store rows off a `(source, doc_id, lmd5)` line
-    * relation: the anti-join side indexes, the semi-join side is
-    * quarantined — ONE split spelling so a line is on exactly one side
-    * of the store for its batch's frozen chrome. */
-  private[graft] def buildLineStateP(li: DataFrame, chromePairs: DataFrame,
-      batchId: Long): LineContainStateP = {
+  /** The re-freeze-capable line store over a tagged `(source, doc_id,
+    * lmd5, batch_id)` line relation: postings WITH the quarantined
+    * chrome complement — the anti-join side indexes, the semi-join side
+    * is quarantined, ONE split spelling so a line is on exactly one
+    * side for its batch's frozen chrome; both sides `(source, doc_id,
+    * gid, batch_id)` — plus the census partials off the SAME line
+    * relation (the one-scan discipline; census-shaped, so the q115/q116
+    * collapse applies). n_docs = distinct doc ids, the
+    * [[boilerCensusOfLines]] equivalence (every page emits its header
+    * line). */
+  private[graft] def lineRefreezeState(li: DataFrame, chromePairs: DataFrame)
+      : PartitionedState = {
     def side(joinType: String): DataFrame =
       li.join(chromePairs, Seq("source", "lmd5"), joinType)
         .select(col("source"), col("doc_id"),
-          Dedup.hex12ToLong(col("lmd5")).as("gid"))
+          Dedup.hex12ToLong(col("lmd5")).as("gid"), col("batch_id"))
         .distinct()
-        .withColumn("batch_id", lit(batchId))
-    LineContainStateP(side("left_anti"), side("left_semi"))
+    PartitionedState(Seq(
+      "surv" -> side("left_anti"), "strip" -> side("left_semi")) ++
+      lineCensus(li).rels)
   }
 
-  /** One batch's census partials off the SAME line relation (the
-    * one-scan discipline: postings split and census read one stored
-    * scan) — [[BoilerIndexP]]-shaped, so the q115/q116 collapse
-    * applies. n_docs = distinct doc ids, the [[boilerCensusOfLines]]
-    * equivalence (every page emits its header line). */
-  private[graft] def lineCensusP(li: DataFrame, batchId: Long)
-      : BoilerIndexP = BoilerIndexP(
-    li.groupBy(col("source"), col("lmd5"))
-      .agg(countDistinct(col("doc_id")).as("cnt"))
-      .withColumn("batch_id", lit(batchId)),
-    li.groupBy(col("source"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"))
-      .withColumn("batch_id", lit(batchId)))
+  /** The census half of [[lineRefreezeState]]. */
+  private[graft] def lineCensus(li: DataFrame): PartitionedState =
+    PartitionedState(Seq(
+      "counts" -> li.groupBy(col("source"), col("lmd5"), col("batch_id"))
+        .agg(countDistinct(col("doc_id")).as("cnt"))
+        .select(col("source"), col("lmd5"), col("cnt"), col("batch_id")),
+      "srcn" -> li.groupBy(col("source"), col("batch_id"))
+        .agg(countDistinct(col("doc_id")).as("n_docs"))
+        .select(col("source"), col("n_docs"), col("batch_id"))))
 
   /** The re-freeze move: surv loses the ADDED chrome's postings to the
     * quarantine, strip returns the REMOVED chrome's postings to the
@@ -3230,8 +3172,8 @@ object TextAnalysis extends QueryModule {
     * joins over the stored gid rows. Algebra: surv' = lines ∉
     * ((C_old ∪ added) ∖ removed) = lines ∉ C_new — exactly the index a
     * full rebuild under C_new produces, without touching text. */
-  private[graft] def refreezeLineState(st: LineContainStateP,
-      oldChrome: DataFrame, newChrome: DataFrame): LineContainStateP = {
+  private[graft] def refreezeLineState(st: PartitionedState,
+      oldChrome: DataFrame, newChrome: DataFrame): PartitionedState = {
     def gidPairs(pairs: DataFrame): DataFrame =
       pairs.select(col("source"), Dedup.hex12ToLong(col("lmd5")).as("gid"))
     val added = gidPairs(
@@ -3243,15 +3185,13 @@ object TextAnalysis extends QueryModule {
     // positional rename silently swaps doc_id↔gid (both LONG)
     def shaped(df: DataFrame): DataFrame = df.select(
       col("source"), col("doc_id"), col("gid"), col("batch_id"))
-    LineContainStateP(
-      shaped(st.surv.join(broadcast(added), Seq("source", "gid"),
-          "left_anti"))
-        .union(shaped(st.strip.join(broadcast(removed),
-          Seq("source", "gid"), "left_semi"))),
-      shaped(st.strip.join(broadcast(removed), Seq("source", "gid"),
-          "left_anti"))
-        .union(shaped(st.surv.join(broadcast(added), Seq("source", "gid"),
-          "left_semi"))))
+    def moved(from: String, flips: DataFrame, joinType: String) =
+      shaped(st(from).join(broadcast(flips), Seq("source", "gid"), joinType))
+    PartitionedState(Seq(
+      "surv" -> moved("surv", added, "left_anti")
+        .union(moved("strip", removed, "left_semi")),
+      "strip" -> moved("strip", removed, "left_anti")
+        .union(moved("surv", added, "left_semi"))))
   }
 
   /** Collapse the store to the probe-ready index. Sizes DERIVE from the
@@ -3259,12 +3199,83 @@ object TextAnalysis extends QueryModule {
     * re-freeze changes per-doc counts, and deriving at publish keeps
     * the move itself append/prune-pure. `source` is projected away
     * FIRST — probe shuffles stay (doc_id, 8-byte gid). */
-  private[graft] def collapseLineState(st: LineContainStateP)
+  private[graft] def collapseLineState(st: PartitionedState)
       : Dedup.ContainIndex = {
-    val g = st.surv.select(col("doc_id"), col("gid"))
+    val g = st("surv").select(col("doc_id"), col("gid"))
     Dedup.ContainIndex(g,
       g.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")),
       g.groupBy(col("gid")).agg(count(lit(1)).as("df")))
+  }
+
+  // ---- the streaming side of q133/q134: the re-freeze-capable line
+  // store at a root. Every promote strips against the CURRENTLY
+  // PUBLISHED chrome (empty before the bootstrap freeze, so everything
+  // lands in surv — exactly the pre-publish state the bootstrap
+  // re-freeze then splits) and appends its own census partial;
+  // `refreezeLineStore` is the maintenance operation a production
+  // pipeline runs when the collapsed census has drifted. The store
+  // rewrite is postings-linear, never corpus-linear; batch ids survive
+  // the move, so demote stays a partition drop on all four relations
+  // (postings AND census partials, so the next re-freeze no longer
+  // counts the recalled documents).
+
+  private val PostingsDdl = "source STRING, doc_id BIGINT, gid BIGINT"
+
+  /** The re-freeze family at `root`: ONE digests scan per batch
+    * (materialized; released after the four partition writes land)
+    * feeds both postings sides and the census partials, stripped
+    * against the chrome published at `root`. */
+  private[graft] def lineRefreezeFamily(root: String): PartitionedState.Family =
+    new PartitionedState.Family(Seq("surv" -> PostingsDdl,
+      "strip" -> PostingsDdl, "counts" -> CountsDdl, "srcn" -> SrcnDdl),
+      (docs, batchId) => {
+        val (li, release) = Scratch.materializeManaged(
+          lineDigests(pageDocs(docs)).withColumn("batch_id", batchId),
+          PartitionedState.scratchName("sprf_li", batchId))
+        (lineRefreezeState(li.toDF("source", "doc_id", "lmd5", "batch_id"),
+          broadcast(publishedChrome(docs.sparkSession, root))), release)
+      })
+
+  /** The published chrome pairs `(source, lmd5)` — an epoch relation
+    * beside the partitioned ones, EMPTY before the first freeze, which
+    * makes the bootstrap publish a plain [[refreezeLineStore]] (every
+    * verdict is a fresh ADD, so the move quarantines exactly the
+    * bootstrap chrome — the batch entries' publish-time split). */
+  private[graft] def publishedChrome(spark: SparkSession, root: String)
+      : DataFrame =
+    if (new java.io.File(s"$root/chrome").exists())
+      spark.read.parquet(s"$root/chrome")
+    else {
+      import spark.implicits._
+      Seq.empty[(String, String)].toDF("source", "lmd5")
+    }
+
+  /** The maintenance RE-FREEZE: collapse the live census partials to
+    * C_new, move the flipped lines' postings between the stored sides,
+    * re-publish the chrome — all three staged before any swap (both
+    * sides read both old stores). Also the BOOTSTRAP publish (old
+    * chrome = ∅). Run with the promote stream stopped or idle. */
+  private[graft] def refreezeLineStore(spark: SparkSession, root: String)
+      : Unit = {
+    // chrome relations are tiny by construction (per-source frequent
+    // lines) — pin them DRIVER-SIDE so the flip sets stay stable across
+    // the staged writes and the chrome swap
+    def pinned(df: DataFrame): DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val live = PartitionedState.live(spark, root, lineRefreezeFamily(root))
+    val oldC = pinned(publishedChrome(spark, root))
+    val newC = pinned(collapsedCensus(live).select(col("source"), col("lmd5")))
+    PartitionedState.refreeze(root,
+      refreezeLineState(live, oldC, newC).rels :+ ("chrome" -> newC))
+  }
+
+  /** Probe the live store under the currently published chrome. */
+  private[graft] def probeLineStore(spark: SparkSession, root: String,
+      probeDocs: DataFrame): DataFrame = {
+    val chrome = broadcast(publishedChrome(spark, root))
+    probeFromG(collapseLineState(
+      PartitionedState.live(spark, root, lineRefreezeFamily(root))),
+      lineGramIds(pageDocs(probeDocs), chrome), "sprfp")
   }
 
   /** The two entries' shared lifecycle over the promoted population
@@ -3291,44 +3302,31 @@ object TextAnalysis extends QueryModule {
       lineDigests(pageDocs(pop)).withColumn("batch_id",
         when(bootPred, lit(0L)).otherwise(lit(1L))),
       s"${tag}_li").toDF("source", "doc_id", "lmd5", "batch_id")
-    def liOf(b: Long): DataFrame = li.where(col("batch_id") === b)
-      .select(col("source"), col("doc_id"), col("lmd5"))
-    val (li0, li1) = (liOf(0L), liOf(1L))
     // C_old: the one boilerCensusOfLines spelling over the bootstrap
     // relation, exactly as lineRelAndChrome freezes it
     val oldChrome = broadcast(Scratch.materialize(
-      boilerCensusOfLines(li0)
+      boilerCensusOfLines(li.where(col("batch_id") === 0L)
+          .select(col("source"), col("doc_id"), col("lmd5")))
         .groupBy(col("source")).agg(collect_set(col("lmd5")).as("bset")),
       s"${tag}_boiler").toDF("source", "bset")
       .select(col("source"), explode(col("bset")).as("lmd5")))
-    val c0 = lineCensusP(li0, 0L)
-    val st0 = buildLineStateP(li0, oldChrome, 0L)
-    val c1 = lineCensusP(li1, 1L)
-    val st1 = buildLineStateP(li1, oldChrome, 1L)
-    // the STORE: both sides land partitioned by batch_id before any
-    // re-freeze — the move provably consumes stored postings, not text
-    val (storedSurv, storedStrip) = Dedup.inParallel(
-      Scratch.materializePartitioned(st0.surv.union(st1.surv),
-        s"${tag}_surv", "batch_id"),
-      Scratch.materializePartitioned(st0.strip.union(st1.strip),
-        s"${tag}_strip", "batch_id"))
-    val stored = LineContainStateP(storedSurv, storedStrip)
+    val built = lineRefreezeState(li, oldChrome)
+    // the STORE: both postings sides land partitioned by batch_id before
+    // any re-freeze — the move provably consumes stored postings, not text
+    val stored = built.select("surv", "strip").stored(tag)
     val newChrome = broadcast(Scratch.materialize(
-      collapsedCensus(BoilerIndexP(
-        c0.counts.union(c1.counts), c0.srcn.union(c1.srcn)))
-        .select(col("source"), col("lmd5")), s"${tag}_nc")
-      .toDF("source", "lmd5"))
+      collapsedCensus(built).select(col("source"), col("lmd5")),
+      s"${tag}_nc").toDF("source", "lmd5"))
     val refrozen = refreezeLineState(stored, oldChrome, newChrome)
-    val (rsurv, gp) = Dedup.inParallel(
+    val (rsurv, gp) = inParallel(
       // republish the surviving index (strip' stays lazy — the probe
       // never consumes it; LineRefreezeSpec pins its correctness)
-      Scratch.materialize(refrozen.surv, s"${tag}_rsurv"),
+      Scratch.materialize(refrozen("surv"), s"${tag}_rsurv"),
       probeLineGrams(newChrome, pop, rest, tag))
     // name-preserving re-alias (fresh attribute ids for the probe's
     // self-joins) — NOT a positional rename, see refreezeLineState
-    val live = LineContainStateP(rsurv.toDF(rsurv.columns: _*),
-      refrozen.strip)
-    probeFromG(collapseLineState(live), gp, tag)
+    probeFromG(collapseLineState(PartitionedState(Seq(
+      "surv" -> rsurv.toDF(rsurv.columns: _*)))), gp, tag)
   }
 
   /** Chrome re-freeze, EMERGED direction (q133): the bootstrap is the

@@ -6,7 +6,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** Streaming CONTAINMENT probe — the streaming twin of batch q127, in
-  * the frozen-index discipline of [[StreamingProbe]]/[[StreamingPromote]]:
+  * the frozen-index discipline of [[StreamingProbe]] and
+  * `queries.PartitionedState`:
   * the corpus containment index (gram postings + per-doc sizes +
   * per-gram dfs, [[Dedup.buildContainIndex]]) freezes once at publish
   * time; each arriving micro-batch of documents runs the SAME probe

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.queries.{Dedup, Similarity}
+import graft.queries.{Dedup, PartitionedState, Similarity}
 
 /** Frozen-index MERGE lifecycle (q100/q101's API): promoting a delta
   * batch into a stored dedup index must be indistinguishable from
@@ -190,19 +190,21 @@ class FrozenIndexSpec extends SparkSpec {
   private def batch2Docs =
     Seq((5L, loremA), (22L, loremC)).toDF("doc_id", "text")
 
-  private def lexProbeP(idx: Dedup.LexIndexP, probe: DataFrame) =
+  private def lex(docs: DataFrame, batchId: Long) =
+    Dedup.lexFamily(docs, batchId)
+
+  private def lexProbeP(idx: PartitionedState, probe: DataFrame) =
     lexRows(Dedup.probeLex(Dedup.collapseLex(idx), probe))
 
   test("lexical: retract ≡ rebuild-without — including a shadowed min that must resurface") {
-    val p1 = Dedup.mergeLexIndexP(
-      Dedup.buildLexIndexP(frozenDocs, 0L), deltaDocs, 1L)
-    val p2 = Dedup.mergeLexIndexP(p1, batch2Docs, 2L)
+    val p1 = lex(frozenDocs, 0L).union(lex(deltaDocs, 1L))
+    val p2 = p1.union(lex(batch2Docs, 2L))
     // while batch 2 is in: 5 owns loremA, loremC is a known dup
     assert(lexProbeP(p2, probeDocs) == Seq(
       (30L, 11L, 11L, false),
       (31L, 21L, 21L, false),
       (32L, 22L, 22L, false)))
-    val demoted = Dedup.retractLexIndexP(p2, 2L)
+    val demoted = p2.retract(2L)
     // after: ownership of loremA falls BACK to frozen 10 (the partial
     // min the collapsed representation would have lost), loremC is
     // novel again — and the whole verdict set equals an index REBUILT
@@ -220,18 +222,15 @@ class FrozenIndexSpec extends SparkSpec {
   }
 
   test("lexical: demote → re-promote round-trips to the merged verdicts") {
-    val p2 = Dedup.mergeLexIndexP(
-      Dedup.mergeLexIndexP(Dedup.buildLexIndexP(frozenDocs, 0L), deltaDocs, 1L),
-      batch2Docs, 2L)
-    val back = Dedup.mergeLexIndexP(
-      Dedup.retractLexIndexP(p2, 2L), batch2Docs, 3L)
+    val p2 = lex(frozenDocs, 0L).union(lex(deltaDocs, 1L))
+      .union(lex(batch2Docs, 2L))
+    val back = p2.retract(2L).union(lex(batch2Docs, 3L))
     assert(lexProbeP(back, probeDocs) == lexProbeP(p2, probeDocs))
   }
 
   test("lexical: retracting a never-promoted batch id is a no-op") {
-    val p1 = Dedup.mergeLexIndexP(
-      Dedup.buildLexIndexP(frozenDocs, 0L), deltaDocs, 1L)
-    assert(lexProbeP(Dedup.retractLexIndexP(p1, 99L), probeDocs)
+    val p1 = lex(frozenDocs, 0L).union(lex(deltaDocs, 1L))
+    assert(lexProbeP(p1.retract(99L), probeDocs)
       == lexProbeP(p1, probeDocs))
   }
 
@@ -241,20 +240,15 @@ class FrozenIndexSpec extends SparkSpec {
     // must reach the scan as a PARTITION filter — the retracted
     // batch's files are never opened (the 100 TB retract-cost claim,
     // machine-checked), and verdicts still equal rebuild-without
-    val p2 = Dedup.mergeLexIndexP(
-      Dedup.mergeLexIndexP(Dedup.buildLexIndexP(frozenDocs, 0L), deltaDocs, 1L),
-      batch2Docs, 2L)
+    val p2 = lex(frozenDocs, 0L).union(lex(deltaDocs, 1L))
+      .union(lex(batch2Docs, 2L))
     val key = "graft.scratch.dir"
     spark.conf.set(key, tmpDir("fidx-part"))
     val stored =
-      try Dedup.LexIndexP(
-        graft.queries.Scratch.materializePartitioned(
-          p2.exact, "t102_exact", "batch_id"),
-        graft.queries.Scratch.materializePartitioned(
-          p2.bands, "t102_bands", "batch_id"))
+      try p2.stored("t102")
       finally spark.conf.unset(key)
-    val demoted = Dedup.retractLexIndexP(stored, 2L)
-    val plan = demoted.exact.queryExecution.executedPlan.toString
+    val demoted = stored.retract(2L)
+    val plan = demoted("exact").queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("batch_id"),
       s"retraction filter did not reach the scan as partition pruning:\n$plan")
     assert(lexProbeP(demoted, probeDocs) == lexRows(Dedup.probeLex(
@@ -265,17 +259,17 @@ class FrozenIndexSpec extends SparkSpec {
   // promoted, plus probes must fall back to 150 after retraction
   private def batch2E = embDF(140L -> v(0.87, 0.13, 0, 0))
 
-  private def semProbeP(idx: Similarity.SemIndexP, probe: DataFrame) =
-    semRows(Similarity.probeSem(Similarity.collapseSem(idx), probe))
+  private def sem(e: DataFrame, batchId: Long) =
+    Similarity.semFamily(cents)(e, batchId)
+
+  private def semProbeP(idx: PartitionedState, probe: DataFrame) =
+    semRows(Similarity.probeSem(Similarity.collapseSem(cents, idx), probe))
 
   test("semantic: retract ≡ rebuild-without — dup_of falls back to the surviving twin") {
-    val p2 = Similarity.mergeSemIndexP(
-      Similarity.mergeSemIndexP(
-        Similarity.buildSemIndexP(frozenE, cents, 0L), deltaE, 1L),
-      batch2E, 2L)
+    val p2 = sem(frozenE, 0L).union(sem(deltaE, 1L)).union(sem(batch2E, 2L))
     assert(semProbeP(p2, probeE).map(t => (t._1, t._3))
       == Seq((1L, 140L), (2L, -1L)))
-    val demoted = Similarity.retractSemIndexP(p2, 2L)
+    val demoted = p2.retract(2L)
     val rebuilt = Similarity.buildSemIndex(frozenE.union(deltaE), cents)
     val got = semProbeP(demoted, probeE)
     assert(got == semRows(Similarity.probeSem(rebuilt, probeE)))
@@ -283,12 +277,8 @@ class FrozenIndexSpec extends SparkSpec {
   }
 
   test("semantic: demote → re-promote round-trips to the merged verdicts") {
-    val p2 = Similarity.mergeSemIndexP(
-      Similarity.mergeSemIndexP(
-        Similarity.buildSemIndexP(frozenE, cents, 0L), deltaE, 1L),
-      batch2E, 2L)
-    val back = Similarity.mergeSemIndexP(
-      Similarity.retractSemIndexP(p2, 2L), batch2E, 3L)
+    val p2 = sem(frozenE, 0L).union(sem(deltaE, 1L)).union(sem(batch2E, 2L))
+    val back = p2.retract(2L).union(sem(batch2E, 3L))
     assert(semProbeP(back, probeE) == semProbeP(p2, probeE))
   }
 }

@@ -80,16 +80,17 @@ class RocksDbStateSpec extends SparkSpec {
       val m = col("doc_id") % 10
       val (frozen, delta, probe) =
         (docs.filter(m < 3), docs.filter(m >= 3 && m < 6), docs.filter(m >= 6))
-      val exactDir = tmpDir("rocks-promote-exact")
-      val bandsDir = tmpDir("rocks-promote-bands")
-      graft.streaming.StreamingPromote.promoteLexBatch(
-        frozen, -1L, exactDir, bandsDir)
+      val root = tmpDir("rocks-promote-lex")
+      val fam = graft.queries.Dedup.lexFamily
+      def lexLive() = graft.queries.Dedup.probeLex(graft.queries.Dedup
+        .collapseLex(graft.queries.PartitionedState.live(sp, root, fam)), probe)
+      graft.queries.PartitionedState.promote(root, fam, frozen, -1L)
       val deltaRows = delta.as[(Long, String)].collect().sortBy(_._1)
       val chunks = deltaRows.grouped((deltaRows.length + 2) / 3).toSeq
       assert(chunks.length == 3 && chunks(0).length >= 4)
       val mem = MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamingPromote.promoteLexGated(
-        mem.toDF().toDF("doc_id", "text"), exactDir, bandsDir)
+      val q = graft.queries.PartitionedState.promote(
+        mem.toDF().toDF("doc_id", "text"), root, fam, gated = true)
       try {
         // micro-batch 1 REDELIVERS half of micro-batch 0's documents —
         // the at-least-once case a fresh batch id gives the partition
@@ -104,8 +105,7 @@ class RocksDbStateSpec extends SparkSpec {
         def lexRows(df: org.apache.spark.sql.DataFrame) = df.collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
           .toSeq
-        val streamed = lexRows(graft.streaming.StreamingPromote
-          .probeLexLive(sp, exactDir, bandsDir, probe))
+        val streamed = lexRows(lexLive())
         val batch = lexRows(
           SparkEntry.queries("q100_lex_index_merge")(sp, lifeSf))
         assert(batch.nonEmpty, "q100 returned no probe rows — spec is vacuous")
@@ -121,12 +121,11 @@ class RocksDbStateSpec extends SparkSpec {
         // TOTAL retraction: demote micro-batch 0 — the redelivered docs
         // must vanish WITH it (the gate kept them out of batch 1), so
         // the live state equals an index that never saw chunk 0
-        graft.streaming.StreamingPromote.demoteLexBatch(exactDir, bandsDir, 0L)
+        graft.queries.PartitionedState.demote(root, fam, 0L)
         val surviving = frozen
           .union(chunks(1).toSeq.toDF("doc_id", "text"))
           .union(chunks(2).toSeq.toDF("doc_id", "text"))
-        assert(lexRows(graft.streaming.StreamingPromote
-            .probeLexLive(sp, exactDir, bandsDir, probe)) ==
+        assert(lexRows(lexLive()) ==
           lexRows(graft.queries.Dedup.probeLex(
             graft.queries.Dedup.buildLexIndex(surviving), probe)),
           "demote left redelivered copies behind — retraction was partial")

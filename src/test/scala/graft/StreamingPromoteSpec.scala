@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingPromote
+import graft.queries.{Dedup, PartitionedState, Similarity, TextAnalysis}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -27,33 +27,39 @@ class StreamingPromoteSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .toSeq
 
+  /** Probe the live lexical state at `root` (batch q100's probe
+    * contract over whatever has been promoted so far). */
+  private def lexLive(root: String,
+      probe: org.apache.spark.sql.DataFrame) =
+    lexRows(Dedup.probeLex(Dedup.collapseLex(
+      PartitionedState.live(spark, root, Dedup.lexFamily)), probe))
+
   /** Drive the lexical promote stream over `delta` in `chunks` ordered
-    * micro-batches against fresh state dirs; returns (probe rows,
-    * state dirs, the chunk list) for follow-up assertions.
+    * micro-batches against a fresh state root; returns (probe rows,
+    * state root, the chunk list) for follow-up assertions.
     */
   private def runLex(chunks: Int) = {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
     val (frozen, delta, probe) = docParts
-    val exactDir = tmpDir("spromote-exact"); val bandsDir = tmpDir("spromote-bands")
+    val root = tmpDir("spromote-lex")
     // bootstrap: the frozen corpus is a promoted batch like any other,
     // seeded under a reserved negative id before the stream starts
-    StreamingPromote.promoteLexBatch(frozen, -1L, exactDir, bandsDir)
+    PartitionedState.promote(root, Dedup.lexFamily, frozen, -1L)
     val deltaRows = delta.as[(Long, String)].collect()
     val groups = deltaRows.grouped(
       math.max(1, (deltaRows.length + chunks - 1) / chunks)).toSeq
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingPromote.promoteLex(
-      mem.toDF().toDF("doc_id", "text"), exactDir, bandsDir)
+    val q = PartitionedState.promote(
+      mem.toDF().toDF("doc_id", "text"), root, Dedup.lexFamily, gated = false)
     try {
       groups.foreach { chunk =>
         mem.addData(chunk.toIndexedSeq)
         q.processAllAvailable()
       }
     } finally q.stop()
-    (lexRows(StreamingPromote.probeLexLive(sp, exactDir, bandsDir, probe)),
-      exactDir, bandsDir, groups)
+    (lexLive(root, probe), root, groups)
   }
 
   test("lexical: streamed promote converges with batch q100 under 1-chunk AND 3-chunk deliveries") {
@@ -65,36 +71,34 @@ class StreamingPromoteSpec extends SparkSpec {
   }
 
   test("lexical: a replayed micro-batch changes nothing (at-least-once promote)") {
-    val (got, exactDir, bandsDir, groups) = runLex(3)
+    val (got, root, groups) = runLex(3)
     val sp = spark
     import sp.implicits._
     // redeliver the middle micro-batch under its ORIGINAL batch id —
     // what Structured Streaming does after a failure before the sink
     // commit was recorded: the partition overwrite absorbs it
-    StreamingPromote.promoteLexBatch(
-      groups(1).toSeq.toDF("doc_id", "text"), 1L, exactDir, bandsDir)
+    PartitionedState.promote(root, Dedup.lexFamily,
+      groups(1).toSeq.toDF("doc_id", "text"), 1L)
     val (_, _, probe) = docParts
-    assert(lexRows(StreamingPromote.probeLexLive(sp, exactDir, bandsDir, probe))
-      == got, "replayed batch changed probe verdicts")
+    assert(lexLive(root, probe) == got, "replayed batch changed probe verdicts")
     // and even a MISID'd redelivery (a fresh batch id — plain
     // at-least-once duplication, no overwrite to save us) is absorbed
     // by the min-merge algebra itself
-    StreamingPromote.promoteLexBatch(
-      groups(1).toSeq.toDF("doc_id", "text"), 99L, exactDir, bandsDir)
-    assert(lexRows(StreamingPromote.probeLexLive(sp, exactDir, bandsDir, probe))
-      == got, "duplicated delta under a new batch id changed probe verdicts")
+    PartitionedState.promote(root, Dedup.lexFamily,
+      groups(1).toSeq.toDF("doc_id", "text"), 99L)
+    assert(lexLive(root, probe) == got,
+      "duplicated delta under a new batch id changed probe verdicts")
   }
 
   test("lexical: demoting a promoted micro-batch ≡ an index that never saw it") {
-    val (_, exactDir, bandsDir, groups) = runLex(3)
+    val (_, root, groups) = runLex(3)
     val sp = spark
     import sp.implicits._
     // drop the MIDDLE micro-batch (bad data found after promote):
     // physically one partition-directory delete per state table
-    StreamingPromote.demoteLexBatch(exactDir, bandsDir, 1L)
+    PartitionedState.demote(root, Dedup.lexFamily, 1L)
     val (frozen, _, probe) = docParts
-    val got = lexRows(
-      StreamingPromote.probeLexLive(sp, exactDir, bandsDir, probe))
+    val got = lexLive(root, probe)
     val surviving = frozen
       .union(groups(0).toSeq.toDF("doc_id", "text"))
       .union(groups(2).toSeq.toDF("doc_id", "text"))
@@ -103,9 +107,9 @@ class StreamingPromoteSpec extends SparkSpec {
       "demoted live state diverged from an index built without the batch")
     // and re-promoting the same documents under a fresh id restores
     // the full-merge verdicts (demote → re-promote round trip)
-    StreamingPromote.promoteLexBatch(
-      groups(1).toSeq.toDF("doc_id", "text"), 7L, exactDir, bandsDir)
-    assert(lexRows(StreamingPromote.probeLexLive(sp, exactDir, bandsDir, probe))
+    PartitionedState.promote(root, Dedup.lexFamily,
+      groups(1).toSeq.toDF("doc_id", "text"), 7L)
+    assert(lexLive(root, probe)
       == lexRows(SparkEntry.queries("q100_lex_index_merge")(sp, sf)),
       "demote → re-promote did not restore the merged verdicts")
   }
@@ -123,21 +127,22 @@ class StreamingPromoteSpec extends SparkSpec {
     val frozen = e.filter(col("vec_id") >= dm)
     val delta = e.filter(col("vec_id") >= dm / 2 && col("vec_id") < dm)
     val probe = e.filter(col("vec_id") < dm / 2)
-    val listsDir = tmpDir("spromote-lists")
-    StreamingPromote.promoteSemBatch(frozen, -1L, cent, listsDir)
+    val root = tmpDir("spromote-sem")
+    val fam = Similarity.semFamily(cent)
+    PartitionedState.promote(root, fam, frozen, -1L)
     val deltaRows = delta.select(col("vec_id"), col("embedding"), col("nrm"))
       .as[(Long, Array[Float], Double)].collect()
     val mem = MemoryStream[(Long, Array[Float], Double)]
-    val q = StreamingPromote.promoteSem(
-      mem.toDF().toDF("vec_id", "embedding", "nrm"), cent, listsDir)
+    val q = PartitionedState.promote(
+      mem.toDF().toDF("vec_id", "embedding", "nrm"), root, fam, gated = false)
     try {
       deltaRows.grouped(math.max(1, (deltaRows.length + 2) / 3)).foreach { c =>
         mem.addData(c.toIndexedSeq)
         q.processAllAvailable()
       }
     } finally q.stop()
-    val streamed = semRows(
-      StreamingPromote.probeSemLive(sp, cent, listsDir, probe))
+    val streamed = semRows(Similarity.probeSem(Similarity.collapseSem(
+      cent, PartitionedState.live(sp, root, fam)), probe))
     val batch = semRows(SparkEntry.queries("q101_sem_index_merge")(sp, sf))
     assert(batch.nonEmpty, "q101 returned no probe rows — spec is vacuous")
     assert(streamed == batch, "streamed semantic promote diverged from batch merge")
@@ -146,15 +151,15 @@ class StreamingPromoteSpec extends SparkSpec {
   // ---- census lifecycle (the q115/q116 twin): SUM algebra, so the
   // document gate is the correctness requirement, not hygiene
 
-  private def censusRows(idx: graft.queries.TextAnalysis.BoilerIndexP) =
-    graft.queries.TextAnalysis.collapsedCensus(idx)
+  private def censusRows(idx: PartitionedState) =
+    TextAnalysis.collapsedCensus(idx)
       .select(col("source"), col("lmd5"), col("cnt"), col("n_docs"))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSet
 
   private def builtRows(docs: org.apache.spark.sql.DataFrame) =
-    censusRows(graft.queries.TextAnalysis.buildBoilerIndexP(docs, 0L))
+    censusRows(TextAnalysis.censusFamily(docs, 0L))
 
   test("census: streamed gated promote converges with the one-shot census; demote ≡ never-promoted; duplicate redelivery absorbed") {
     val sp = spark
@@ -165,15 +170,15 @@ class StreamingPromoteSpec extends SparkSpec {
     val m = col("doc_id") % 7
     val frozen = docs.filter(m < 3)
     val delta = docs.filter(m >= 3 && m < 5)
-    val countsDir = tmpDir("spromote-counts")
-    val srcnDir = tmpDir("spromote-srcn")
-    StreamingPromote.promoteCensusBatch(frozen, -1L, countsDir, srcnDir)
+    val root = tmpDir("spromote-census")
+    val fam = TextAnalysis.censusFamily
+    PartitionedState.promote(root, fam, frozen, -1L)
     val deltaRows = delta.as[(Long, String, String)].collect()
     val groups = deltaRows.grouped(
       math.max(1, (deltaRows.length + 1) / 2)).toSeq
     val mem = MemoryStream[(Long, String, String)]
-    val q = StreamingPromote.promoteCensusGated(
-      mem.toDF().toDF("doc_id", "text", "source"), countsDir, srcnDir)
+    val q = PartitionedState.promote(
+      mem.toDF().toDF("doc_id", "text", "source"), root, fam, gated = true)
     try {
       groups.foreach { chunk =>
         mem.addData(chunk.toIndexedSeq)
@@ -184,15 +189,15 @@ class StreamingPromoteSpec extends SparkSpec {
       mem.addData(groups(0).take(3).toIndexedSeq)
       q.processAllAvailable()
     } finally q.stop()
-    val live = StreamingPromote.liveCensusIndex(sp, countsDir, srcnDir)
+    val live = PartitionedState.live(sp, root, fam)
     val oneShot = builtRows(docs.filter(m < 5))
     assert(oneShot.nonEmpty, "fixture census is empty — spec is vacuous")
     assert(censusRows(live) == oneShot,
       "streamed census diverged from the one-shot build (gate leak?)")
     // demote the SECOND delta micro-batch (batch id 1): the directory
     // drop must equal a census that never counted those documents
-    StreamingPromote.demoteCensusBatch(countsDir, srcnDir, 1L)
-    val after = StreamingPromote.liveCensusIndex(sp, countsDir, srcnDir)
+    PartitionedState.demote(root, fam, 1L)
+    val after = PartitionedState.live(sp, root, fam)
     val without = builtRows(
       frozen.union(groups(0).toSeq.toDF("doc_id", "text", "source")))
     assert(censusRows(after) == without,
@@ -229,15 +234,19 @@ class StreamingPromoteSpec extends SparkSpec {
       val delta = docs.filter(m >= 3 && m < 5)
       val probeDocs = graft.queries.Dedup.snipOf(docs.filter(m < 5))
         .unionByName(docs.filter(m >= 5))
-      val gDir = tmpDir("spromote-cg"); val szDir = tmpDir("spromote-csz")
-      StreamingPromote.promoteContainBatch(frozen, -1L, gDir, szDir)
+      val root = tmpDir("spromote-contain")
+      val fam = Dedup.containFamily
+      def containLive() = containRows(Dedup.probeFromG(
+        Dedup.collapseContain(PartitionedState.live(sp, root, fam)),
+        Dedup.gramIds(probeDocs), "spromc"))
+      PartitionedState.promote(root, fam, frozen, -1L)
       val deltaRows = delta.as[(Long, String)].collect().sortBy(_._1)
       val chunks = deltaRows.grouped(
         math.max(1, (deltaRows.length + 2) / 3)).toSeq
       assert(chunks.length == 3 && chunks(0).length >= 4)
       val mem = MemoryStream[(Long, String)]
-      val q = StreamingPromote.promoteContainGated(
-        mem.toDF().toDF("doc_id", "text"), gDir, szDir)
+      val q = PartitionedState.promote(
+        mem.toDF().toDF("doc_id", "text"), root, fam, gated = true)
       try {
         mem.addData(chunks(0).toIndexedSeq)
         q.processAllAvailable()
@@ -256,8 +265,7 @@ class StreamingPromoteSpec extends SparkSpec {
         assert(metrics.stream().anyMatch(_.toLowerCase.contains("rocksdb")),
           s"no rocksdb metrics in $metrics")
       } finally q.stop()
-      val streamed = containRows(
-        StreamingPromote.probeContainLive(sp, gDir, szDir, probeDocs))
+      val streamed = containLive()
       val batch = containRows(
         SparkEntry.queries("q128_contain_index_merge")(sp, sf))
       assert(batch.nonEmpty, "q128 returned no probe rows — spec is vacuous")
@@ -266,17 +274,16 @@ class StreamingPromoteSpec extends SparkSpec {
       // demote micro-batch 1 (the gate kept the redelivered docs OUT of
       // its partition, so the drop removes exactly chunks(1) — a leaked
       // duplicate would make this demote partial and fail the gate)
-      StreamingPromote.demoteContainBatch(gDir, szDir, 1L)
+      PartitionedState.demote(root, fam, 1L)
       val surviving = frozen
         .union(chunks(0).toSeq.toDF("doc_id", "text"))
         .union(chunks(2).toSeq.toDF("doc_id", "text"))
-      val p = graft.queries.Dedup.buildContainIndexP(surviving, 0L)
-      val gp = graft.queries.Dedup.gramIds(probeDocs)
-      val want = containRows(graft.queries.Dedup.probeContain(
-        graft.queries.Dedup.collapseContain(p), gp,
+      val p = Dedup.containFamily(surviving, 0L)
+      val gp = Dedup.gramIds(probeDocs)
+      val want = containRows(Dedup.probeContain(
+        Dedup.collapseContain(p), gp,
         gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "tpromw"))
-      assert(containRows(StreamingPromote.probeContainLive(
-        sp, gDir, szDir, probeDocs)) == want,
+      assert(containLive() == want,
         "demoted containment state diverged from rebuilt-without")
     } finally {
       saved.fold(sp.conf.unset(key))(v => sp.conf.set(key, v))
@@ -308,16 +315,20 @@ class StreamingPromoteSpec extends SparkSpec {
       // same frozen input every delta batch is stripped against
       val (_, chrome) = graft.queries.TextAnalysis.lineRelAndChrome(
         graft.queries.TextAnalysis.pageDocs(frozen), "tlcfreeze")
-      val gDir = tmpDir("spromote-lcg"); val szDir = tmpDir("spromote-lcsz")
-      StreamingPromote.promoteLineContainBatch(frozen, -1L, chrome,
-        gDir, szDir)
+      val root = tmpDir("spromote-linecontain")
+      val fam = TextAnalysis.lineContainFamily(chrome)
+      def lineLive() = containRows(TextAnalysis.probeFromG(
+        Dedup.collapseContain(PartitionedState.live(sp, root, fam)),
+        TextAnalysis.lineGramIds(TextAnalysis.pageDocs(probeDocs), chrome),
+        "spromlc"))
+      PartitionedState.promote(root, fam, frozen, -1L)
       val deltaRows = delta.as[(Long, String, String)].collect().sortBy(_._1)
       val chunks = deltaRows.grouped(
         math.max(1, (deltaRows.length + 2) / 3)).toSeq
       assert(chunks.length == 3 && chunks(0).length >= 4)
       val mem = MemoryStream[(Long, String, String)]
-      val q = StreamingPromote.promoteLineContainGated(
-        mem.toDF().toDF("doc_id", "source", "text"), chrome, gDir, szDir)
+      val q = PartitionedState.promote(
+        mem.toDF().toDF("doc_id", "source", "text"), root, fam, gated = true)
       try {
         mem.addData(chunks(0).toIndexedSeq)
         q.processAllAvailable()
@@ -336,8 +347,7 @@ class StreamingPromoteSpec extends SparkSpec {
         assert(metrics.stream().anyMatch(_.toLowerCase.contains("rocksdb")),
           s"no rocksdb metrics in $metrics")
       } finally q.stop()
-      val streamed = containRows(StreamingPromote.probeLineContainLive(
-        sp, chrome, gDir, szDir, probeDocs))
+      val streamed = lineLive()
       val batch = containRows(
         SparkEntry.queries("q131_line_contain_merge")(sp, sf))
       assert(batch.nonEmpty, "q131 returned no probe rows — spec is vacuous")
@@ -345,19 +355,17 @@ class StreamingPromoteSpec extends SparkSpec {
         "streamed line-containment promote diverged from batch q131")
       // demote micro-batch 1; rebuilt-without is built under the SAME
       // frozen chrome (the lifecycle contract — not a re-frozen census)
-      StreamingPromote.demoteLineContainBatch(gDir, szDir, 1L)
+      PartitionedState.demote(root, fam, 1L)
       val surviving = frozen
         .union(chunks(0).toSeq.toDF("doc_id", "source", "text"))
         .union(chunks(2).toSeq.toDF("doc_id", "source", "text"))
-      val p = graft.queries.TextAnalysis.buildLineContainIndexP(
-        surviving, chrome, 0L, "tlcw")
+      val p = fam(surviving, 0L)
       val gp = graft.queries.TextAnalysis.lineGramIds(
         graft.queries.TextAnalysis.pageDocs(probeDocs), chrome)
       val want = containRows(graft.queries.Dedup.probeContain(
         graft.queries.Dedup.collapseContain(p), gp,
         gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "tlcwp"))
-      assert(containRows(StreamingPromote.probeLineContainLive(
-        sp, chrome, gDir, szDir, probeDocs)) == want,
+      assert(lineLive() == want,
         "demoted line-containment state diverged from rebuilt-without")
     } finally {
       saved.fold(sp.conf.unset(key))(v => sp.conf.set(key, v))

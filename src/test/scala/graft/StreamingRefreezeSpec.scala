@@ -1,7 +1,6 @@
 package graft
 
-import graft.streaming.StreamingPromote
-import graft.streaming.StreamingPromote.LineRefreezeDirs
+import graft.queries.{PartitionedState, TextAnalysis}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -22,10 +21,6 @@ class StreamingRefreezeSpec extends SparkSpec {
   private def containRows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
       r.getLong(3), r.getDouble(4))).toSeq
-
-  private def freshDirs() = LineRefreezeDirs(
-    tmpDir("srf-surv"), tmpDir("srf-strip"), tmpDir("srf-cnt"),
-    tmpDir("srf-srcn"), tmpDir("srf-chrome") + "/chrome")
 
   test("streamed re-freeze on RocksDB: bootstrap freeze from empty chrome, gated delta promote with redelivery, census-drift re-freeze ≡ batch q133; demote under the published epoch ≡ rebuilt-without") {
     val sp = spark
@@ -49,13 +44,14 @@ class StreamingRefreezeSpec extends SparkSpec {
       val probeDocs = graft.queries.TextAnalysis.quoteOf(pop)
         .unionByName(docs.filter(m >= 5)
           .select(col("doc_id"), col("source"), col("text")))
-      val dirs = freshDirs()
+      val root = tmpDir("srf-store")
+      val fam = TextAnalysis.lineRefreezeFamily(root)
       // bootstrap: promote under the (empty) pre-freeze chrome, then
       // the bootstrap freeze — a re-freeze from ∅ that must quarantine
       // exactly the bootstrap census's chrome
-      StreamingPromote.promoteLineRefreezeBatch(boot, -1L, dirs)
-      StreamingPromote.refreezeLineLive(sp, dirs)
-      val chromeAfterBoot = StreamingPromote.publishedChrome(sp, dirs)
+      PartitionedState.promote(root, fam, boot, -1L)
+      TextAnalysis.refreezeLineStore(sp, root)
+      val chromeAfterBoot = TextAnalysis.publishedChrome(sp, root)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(chromeAfterBoot.nonEmpty, "bootstrap freeze published no chrome")
       // the delta stream, gated, in 3 ordered chunks with micro-batch 1
@@ -65,8 +61,8 @@ class StreamingRefreezeSpec extends SparkSpec {
         math.max(1, (deltaRows.length + 2) / 3)).toSeq
       assert(chunks.length == 3 && chunks(0).length >= 4)
       val mem = MemoryStream[(Long, String, String)]
-      val q = StreamingPromote.promoteLineRefreezeGated(
-        mem.toDF().toDF("doc_id", "source", "text"), dirs)
+      val q = PartitionedState.promote(
+        mem.toDF().toDF("doc_id", "source", "text"), root, fam, gated = true)
       try {
         mem.addData(chunks(0).toIndexedSeq)
         q.processAllAvailable()
@@ -84,13 +80,13 @@ class StreamingRefreezeSpec extends SparkSpec {
       } finally q.stop()
       // census has drifted (the delta carries the footer): the
       // maintenance re-freeze re-publishes and moves postings
-      StreamingPromote.refreezeLineLive(sp, dirs)
-      val chromeAfterDrift = StreamingPromote.publishedChrome(sp, dirs)
+      TextAnalysis.refreezeLineStore(sp, root)
+      val chromeAfterDrift = TextAnalysis.publishedChrome(sp, root)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert((chromeAfterDrift -- chromeAfterBoot).nonEmpty,
         "delta staged no chrome drift — the re-freeze gate is vacuous")
       val streamed = containRows(
-        StreamingPromote.probeLineRefreezeLive(sp, dirs, probeDocs))
+        TextAnalysis.probeLineStore(sp, root, probeDocs))
       val batch = containRows(
         SparkEntry.queries("q133_chrome_refreeze_add")(sp, sf))
       assert(batch.nonEmpty, "q133 returned no probe rows — spec is vacuous")
@@ -99,24 +95,23 @@ class StreamingRefreezeSpec extends SparkSpec {
       // demote micro-batch 1 (chunk 1 ∪ the redelivered half was
       // gated down to chunk 1 alone) — rebuilt-without is built under
       // the PUBLISHED chrome, not a re-collapsed census
-      StreamingPromote.demoteLineRefreezeBatch(dirs, 1L)
+      PartitionedState.demote(root, fam, 1L)
       val surviving = boot
         .union(chunks(0).toSeq.toDF("doc_id", "source", "text"))
         .union(chunks(2).toSeq.toDF("doc_id", "source", "text"))
-      val chromeNow = StreamingPromote.publishedChrome(sp, dirs)
+      val chromeNow = TextAnalysis.publishedChrome(sp, root)
       val want = {
         val ta = graft.queries.TextAnalysis
         val li = ta.lineDigests(ta.pageDocs(surviving))
-        val st = ta.buildLineStateP(li, broadcast(chromeNow), 0L)
-        val idx = ta.collapseLineState(ta.LineContainStateP(
-          st.surv, st.strip))
+        val idx = ta.collapseLineState(ta.lineRefreezeState(
+          li.withColumn("batch_id", lit(0L)), broadcast(chromeNow)))
         val gp = ta.lineGramIds(ta.pageDocs(probeDocs),
           broadcast(chromeNow))
         containRows(graft.queries.Dedup.probeContain(idx, gp,
           gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "srfw"))
       }
       assert(containRows(
-        StreamingPromote.probeLineRefreezeLive(sp, dirs, probeDocs))
+        TextAnalysis.probeLineStore(sp, root, probeDocs))
         == want,
         "demoted re-freeze store diverged from rebuilt-without")
     } finally {
