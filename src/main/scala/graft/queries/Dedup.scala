@@ -1653,15 +1653,9 @@ object Dedup extends QueryModule {
   private[graft] val lexFamily: PartitionedState.Family =
     PartitionedState.family(
       "exact" -> "norm_md5 STRING, idx_doc BIGINT",
-      "bands" -> "doc_id BIGINT, band_key STRING") { (docs, batchId) =>
-      PartitionedState(Seq(
-        "exact" -> docs.select(normMd5(col("text")).as("norm_md5"),
-            col("doc_id"), batchId.as("batch_id"))
-          .groupBy(col("norm_md5"), col("batch_id"))
-          .agg(min(col("doc_id")).as("idx_doc"))
-          .select(col("norm_md5"), col("idx_doc"), col("batch_id")),
-        "bands" -> bandEntries(docs.select(col("doc_id"), col("text")))
-          .withColumn("batch_id", batchId)))
+      "bands" -> "doc_id BIGINT, band_key STRING") { docs =>
+      val b = buildLexIndex(docs)
+      Seq("exact" -> b.exact, "bands" -> b.bands)
     }
 
   /** Collapse provenance state to the probe shape: min over each key's
@@ -2390,8 +2384,8 @@ object Dedup extends QueryModule {
   /** The word-grain containment family. */
   private[graft] val containFamily: PartitionedState.Family =
     new PartitionedState.Family(ContainRelations, (docs, batchId) =>
-      containState(gramIds(docs).withColumn("batch_id", batchId),
-        PartitionedState.scratchName("cip", batchId)))
+      containState(gramIds(docs).withColumn("batch_id", lit(batchId)),
+        s"cip${batchId}_g"))
 
   /** Collapse the surviving partials to the probe-ready index: df is
     * ONE count over the stored postings (the census SUM-at-probe-time

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.Overlap
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -86,33 +86,29 @@ object PartitionedState {
     * batch_id, the shape `live` returns for a store with nothing
     * promoted) and its per-batch build. The build returns the batch's
     * tagged partials plus a release handle for any scan it
-    * materialized. The batch id is a column: a literal for one promoted
-    * batch, or a per-row function of doc_id for a batch entry's ONE
-    * tagged scan over several batches (batch membership is a pure
-    * function of doc_id, so the tagged scan IS the union of the
-    * per-batch partials). */
+    * materialized. (A batch entry's ONE tagged scan over several
+    * batches tags rows per doc_id instead and goes through the
+    * family's state function directly — batch membership is a pure
+    * function of doc_id, so that scan IS the union of the per-batch
+    * partials.) */
   final class Family(val relations: Seq[(String, String)],
-      val build: (DataFrame, Column) => (PartitionedState, () => Unit)) {
+      val build: (DataFrame, Long) => (PartitionedState, () => Unit)) {
     /** One batch's partials as a value; its scratch is left to the
       * harness sweep. */
     def apply(batch: DataFrame, batchId: Long): PartitionedState =
-      build(batch, lit(batchId))._1
+      build(batch, batchId)._1
   }
 
-  /** A family whose build materializes nothing. */
+  /** A family whose build materializes nothing: the batch's untagged
+    * relations, tagged here. */
   def family(relations: (String, String)*)(
-      build: (DataFrame, Column) => PartitionedState): Family =
-    new Family(relations, (b, id) => (build(b, id), () => ()))
+      build: DataFrame => Seq[(String, DataFrame)]): Family =
+    new Family(relations, (b, id) => (tag(build(b), id), () => ()))
 
   /** Tag every relation with its batch id. */
-  def tag(rels: Seq[(String, DataFrame)], batchId: Column): PartitionedState =
+  def tag(rels: Seq[(String, DataFrame)], batchId: Long): PartitionedState =
     PartitionedState(rels.map { case (n, df) =>
-      n -> df.withColumn(BatchCol, batchId) })
-
-  /** A per-batch scratch name for a build's materialized scan: distinct
-    * per batch-id expression, stable across replays (overwrite). */
-  def scratchName(prefix: String, batchId: Column): String =
-    s"${prefix}_${Integer.toHexString(batchId.toString.hashCode)}"
+      n -> df.withColumn(BatchCol, lit(batchId)) })
 
   private def partition(root: String, name: String, batchId: Long) =
     s"$root/$name/$BatchCol=$batchId"
@@ -124,7 +120,7 @@ object PartitionedState {
     * seed a frozen corpus under a negative batch id. */
   def promote(root: String, family: Family, batch: DataFrame,
       batchId: Long): Unit = {
-    val (state, release) = family.build(batch, lit(batchId))
+    val (state, release) = family.build(batch, batchId)
     try {
       Overlap.all(state.rels.map { case (n, df) => () =>
         df.drop(BatchCol).write.mode("overwrite")

@@ -576,8 +576,7 @@ object Similarity extends QueryModule {
   private[graft] def semFamily(cent: DataFrame): PartitionedState.Family =
     PartitionedState.family("lists" ->
         "idx_id BIGINT, cid BIGINT, i_emb ARRAY<FLOAT>, i_nrm DOUBLE") {
-      (e, batchId) =>
-        PartitionedState.tag(Seq("lists" -> assignLists(e, cent)), batchId)
+      e => Seq("lists" -> assignLists(e, cent))
     }
 
   /** Collapse to the probe shape under the frozen quantizer: provenance

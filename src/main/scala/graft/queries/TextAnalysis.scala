@@ -1781,17 +1781,12 @@ object TextAnalysis extends QueryModule {
     * counts and per-batch (source, n_docs). */
   private[graft] val censusFamily: PartitionedState.Family =
     PartitionedState.family("counts" -> CountsDdl, "srcn" -> SrcnDdl) {
-      (docs, batchId) =>
+      docs =>
         val pd = pageDocs(docs)
-        PartitionedState(Seq(
-          "counts" -> lineDigests(pd).withColumn("batch_id", batchId)
-            .groupBy(col("source"), col("lmd5"), col("batch_id"))
-            .agg(countDistinct(col("doc_id")).as("cnt"))
-            .select(col("source"), col("lmd5"), col("cnt"), col("batch_id")),
-          "srcn" -> pd.withColumn("batch_id", batchId)
-            .groupBy(col("source"), col("batch_id"))
-            .agg(count(lit(1)).as("n_docs"))
-            .select(col("source"), col("n_docs"), col("batch_id"))))
+        Seq(
+          "counts" -> lineDigests(pd).groupBy(col("source"), col("lmd5"))
+            .agg(countDistinct(col("doc_id")).as("cnt")),
+          "srcn" -> pd.groupBy(col("source")).agg(count(lit(1)).as("n_docs")))
     }
 
   /** SUM-collapse the surviving partials and threshold — the stored
@@ -2953,8 +2948,8 @@ object TextAnalysis extends QueryModule {
       : PartitionedState.Family =
     new PartitionedState.Family(Dedup.ContainRelations, (docs, batchId) =>
       lineContainState(
-        lineDigests(pageDocs(docs)).withColumn("batch_id", batchId), chrome,
-        PartitionedState.scratchName("lcp", batchId)))
+        lineDigests(pageDocs(docs)).withColumn("batch_id", lit(batchId)),
+        chrome, s"splc_lcp${batchId}_g"))
 
   /** The lifecycle entries' shared probe-side line scan: constructed
     * quotes of `quoteBase` parents ∪ the unseen `rest` docs, reduced to
@@ -3230,8 +3225,8 @@ object TextAnalysis extends QueryModule {
       "strip" -> PostingsDdl, "counts" -> CountsDdl, "srcn" -> SrcnDdl),
       (docs, batchId) => {
         val (li, release) = Scratch.materializeManaged(
-          lineDigests(pageDocs(docs)).withColumn("batch_id", batchId),
-          PartitionedState.scratchName("sprf_li", batchId))
+          lineDigests(pageDocs(docs)).withColumn("batch_id", lit(batchId)),
+          s"sprf_li$batchId")
         (lineRefreezeState(li.toDF("source", "doc_id", "lmd5", "batch_id"),
           broadcast(publishedChrome(docs.sparkSession, root))), release)
       })
